@@ -1,17 +1,12 @@
 #!/usr/bin/env python
-"""Consume-endpoint client — the analog of the reference's manual test
-listener (/root/reference/ws_listener.py): connects, parses both wire
-formats, prints per-message lines and session byte stats
-(ws_listener.py:32-48,54-81).
+"""WebSocket consume client — the analog of the reference's manual test
+listener (ws_listener.py): connects to the public WebSocket API over
+RFC 6455, parses both wire formats, prints per-message lines and session
+byte stats (ws_listener.py:32-48,54-81).
 
 Usage:
-    python es_client.py http://localhost:8081 <uuid> [-o ORDINAL | -t MS | -d DT]
+    python es_client.py ws://localhost:8080 <uuid> [-o ORDINAL | -t MS | -d DT]
                         [--max-events N] [--timeout S]
-    python es_client.py ws://localhost:8080 <uuid> [...]   # real WebSocket
-
-With a ``ws://`` base URL the client speaks RFC 6455 against the public
-WebSocket API (the reference's native transport, ws_listener.py analog);
-with ``http://`` it drains the bounded NDJSON consume endpoint.
 """
 
 from __future__ import annotations
@@ -20,7 +15,8 @@ import argparse
 import json
 import sys
 import urllib.parse
-import urllib.request
+
+from squonk2_fastapi_ws_event_stream_spark.streaming.websocket import WsClient
 
 
 def parse_message(line: str) -> dict:
@@ -75,16 +71,16 @@ class ByteStats:
         }
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("base_url")
+    ap.add_argument("base_url", help="ws://host:port of the WebSocket API")
     ap.add_argument("uuid")
     ap.add_argument("-o", "--ordinal", type=int)
     ap.add_argument("-t", "--timestamp", type=int)
     ap.add_argument("-d", "--datetime")
     ap.add_argument("--max-events", type=int, default=100)
     ap.add_argument("--timeout", type=float, default=10.0)
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     params: dict = {"max_events": args.max_events, "timeout_s": args.timeout}
     if args.ordinal is not None:
@@ -95,38 +91,22 @@ def main() -> None:
         params["stream_from_datetime"] = args.datetime
 
     stats = ByteStats()
-    if args.base_url.startswith(("ws://", "wss://")):
-        from squonk2_fastapi_ws_event_stream_spark.streaming.websocket import WsClient
-
-        u = urllib.parse.urlparse(args.base_url)
-        resource = f"/event-stream/{args.uuid}?" + urllib.parse.urlencode(params)
-        c = WsClient(u.hostname, u.port or 80, resource, timeout=args.timeout + 30)
-        try:
-            while True:
-                text, close = c.recv_text_or_close()
-                if text is None:
-                    print(f"closed: {close}", file=sys.stderr)
-                    break
-                stats.add(len(text.encode("utf-8")))
-                m = parse_message(text)
-                print(f"[{m['ordinal']}] {m['timestamp']} {m['message_type']} {m['body']}")
-        finally:
-            c.shutdown()
-    else:
-        url = (
-            f"{args.base_url.rstrip('/')}/event-stream/{args.uuid}/consume?"
-            + urllib.parse.urlencode(params)
-        )
-        # client-side timeout: the server's timeout_s bounds the idle wait,
-        # but a hung/unreachable server must not block forever
-        with urllib.request.urlopen(url, timeout=args.timeout + 30) as resp:
-            for raw in resp:
-                line = raw.decode("utf-8").rstrip("\n")
-                if not line:
-                    continue
-                stats.add(len(line.encode("utf-8")))
-                m = parse_message(line)
-                print(f"[{m['ordinal']}] {m['timestamp']} {m['message_type']} {m['body']}")
+    u = urllib.parse.urlparse(args.base_url)
+    resource = f"/event-stream/{args.uuid}?" + urllib.parse.urlencode(params)
+    # client-side timeout: the server's timeout_s bounds the idle wait,
+    # but a hung/unreachable server must not block forever
+    c = WsClient(u.hostname, u.port or 80, resource, timeout=args.timeout + 30)
+    try:
+        while True:
+            text, close = c.recv_text_or_close()
+            if text is None:
+                print(f"closed: {close}", file=sys.stderr)
+                break
+            stats.add(len(text.encode("utf-8")))
+            m = parse_message(text)
+            print(f"[{m['ordinal']}] {m['timestamp']} {m['message_type']} {m['body']}")
+    finally:
+        c.shutdown()
     print(json.dumps(stats.summary()), file=sys.stderr)
 
 

@@ -1,13 +1,13 @@
 #!/usr/bin/env python
-"""Run the event-stream service: Spark-backed control plane + consume API.
+"""Run the event-stream service: Spark-backed control plane + WebSocket API.
 
 Usage:
     python serve.py [--port 8081] [--ws-port 8080] [--log-root /data/event-log] \
                     [--db /data/event-streams.db] [--checkpoints /data/ckpt]
 
 One process, two listeners — matching the reference's split
-(docker-entrypoint.sh:8-10): the internal REST API (C1-C4 + HTTP-stream
-consume) on --port, and the public WebSocket API (C5, RFC 6455 on the
+(docker-entrypoint.sh:8-10): the internal REST API (C1-C4) on --port, and
+the public WebSocket API (C5, the only consume path; RFC 6455 on the
 stdlib, streaming/websocket.py) on --ws-port. Both front one SparkSession.
 """
 

@@ -339,9 +339,7 @@ class EventStreamStreamReader(DataSourceStreamReader):
         self.stream = options.get("stream")
         if not self.stream:
             raise ValueError("option 'stream' is required for streaming reads")
-        if not stream_exists(self.root, self.stream) and not _opt(
-            options, "allowMissingStream"
-        ):
+        if not stream_exists(self.root, self.stream):
             # WS close 1013 analog (app/app.py:311-318)
             raise ValueError(f"EventStream backing stream does not exist: {self.stream}")
         self.options = options

@@ -1,5 +1,5 @@
 """Control-plane REST API — the reference's internal API surface (C1-C4,
-SURVEY §2.8) plus the consume path (C5).
+SURVEY §2.8).
 
 Request/response shapes mirror /root/reference/app/app.py:150-187 exactly:
 
@@ -7,18 +7,13 @@ Request/response shapes mirror /root/reference/app/app.py:150-187 exactly:
     POST   /event-stream/           → 201 {id, location}            (C2, :606-649)
     GET    /event-stream/           → {event_streams: [...]}        (C3, :652-674)
     DELETE /event-stream/<id>       → 204 | 404                     (C4, :677-717)
-    GET    /event-stream/<uuid>/consume?stream_from_*               (C5, :193-373)
 
-Transport note: the reference serves C5 over WebSocket (protocol string
-"WEBSOCKET", app/app.py:598-603). Real WebSocket transport ships in
-`streaming/websocket.py` — an RFC 6455 server on the Python stdlib (this
-container has no `websockets`/ASGI package), started alongside this app by
-serve.py on its own port, matching the reference's two-listener split
-(public WS 8080 / internal REST 8081, docker-entrypoint.sh:8-10). The
-HTTP-stream consume below remains as a second transport for bounded
-drains; its close codes map to HTTP errors: 1000 unknown-uuid → 404
-(app/app.py:287-291), 1002 bad params → 400 (:269-278), 1013 missing
-stream → 503 (:314-318).
+The consume path (C5, app/app.py:193-373) is WebSocket only, as in the
+reference (protocol string "WEBSOCKET", app/app.py:598-603): an RFC 6455
+server on the Python stdlib (`streaming/websocket.py`) that serve.py
+starts beside this app on its own port, matching the reference's
+two-listener split (public WS 8080 / internal REST 8081,
+docker-entrypoint.sh:8-10).
 
 Flask (WSGI) is fine here: the heavy lifting is inside Spark; the API layer
 only manages StreamingQuery handles — it is control plane, not data plane.
@@ -26,15 +21,12 @@ only manages StreamingQuery handles — it is control plane, not data plane.
 
 from __future__ import annotations
 
-import json
-import queue
-
+from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
 
-from flask import Flask, Response, jsonify, request
+from flask import Flask, jsonify, request
 
 from .. import __version__
-from ..sources.eventstream import stream_exists
 from ..sources.registry import Registry
 from .manager import StreamManager
 
@@ -58,11 +50,12 @@ def create_app(
     def health():
         """Readiness/liveness analog of the reference's probe scripts
         (probes/readiness.sh, probes/liveness.sh): reports Spark session
-        liveness and the per-stream consumer states."""
+        liveness and the per-stream consumer states. The liveness check is
+        one JVM call, not a Spark job, so polling it costs the engine
+        nothing."""
         try:
-            spark.sql("SELECT 1").collect()
-            spark_ok = True
-        except Exception:
+            spark_ok = not spark.sparkContext._jsc.sc().isStopped()
+        except Py4JError:  # the JVM gateway itself is gone
             spark_ok = False
         status = 200 if spark_ok else 503
         return jsonify({"spark": spark_ok, "consumers": manager.snapshot()}), status
@@ -109,71 +102,5 @@ def create_app(
         registry.delete(es_id)
         return "", 204
 
-    @app.get("/event-stream/<es_uuid>/consume")
-    def consume(es_uuid: str):  # C5
-        params = {
-            "stream_from_ordinal": request.args.get("stream_from_ordinal"),
-            "stream_from_timestamp": request.args.get("stream_from_timestamp"),
-            "stream_from_datetime": request.args.get("stream_from_datetime"),
-        }
-        given = [k for k, v in params.items() if v is not None]
-        if len(given) > 1:
-            # WS close 1002 analog (app/app.py:269-278)
-            return (
-                jsonify({"detail": "Cannot provide more than one 'stream_from_' variable"}),
-                400,
-            )
-        rec = registry.get_by_uuid(es_uuid)
-        if rec is None:
-            # WS close 1000 "Connect for unknown EventStream" (app/app.py:287-291)
-            return jsonify({"detail": "Connect for unknown EventStream"}), 404
-        if not stream_exists(manager.log_root, rec["routing_key"]):
-            # WS close 1013 analog (app/app.py:314-318)
-            return jsonify({"detail": "EventStream backing stream not found"}), 503
-
-        max_events = int(request.args.get("max_events", 100))
-        timeout_s = float(request.args.get("timeout_s", 10.0))
-        handle = manager.start_consumer(
-            rec["routing_key"],
-            starting_ordinal=(
-                int(params["stream_from_ordinal"])
-                if params["stream_from_ordinal"] is not None
-                else None
-            ),
-            starting_timestamp_ms=(
-                int(params["stream_from_timestamp"])
-                if params["stream_from_timestamp"] is not None
-                else None
-            ),
-            starting_datetime=params["stream_from_datetime"],
-        )
-
-        def generate():
-            delivered = 0
-            try:
-                while delivered < max_events:
-                    try:
-                        chunk = handle.hub.get(timeout=timeout_s)
-                    except queue.Empty:
-                        break
-                    if chunk is None:  # poison/stop sentinel
-                        break
-                    # The hub hands chunks (one per micro-batch slice);
-                    # serve up to the max_events boundary in one yield.
-                    take = chunk[: max_events - delivered]
-                    yield "".join(d.out + "\n" for d in take)
-                    delivered += len(take)
-            finally:
-                # by handle identity: a newer consume request may already
-                # have replaced this stream's consumer — don't stop it
-                manager.stop_consumer_if_current(rec["routing_key"], handle)
-
-        return Response(generate(), mimetype="application/x-ndjson")
-
     return app
 
-
-def serialize_stats(stats: dict) -> str:
-    """A1 message-stats line (app/app.py:515-518 cadence semantics are the
-    caller's concern; this is the payload shape)."""
-    return json.dumps({"received": stats.get("received", 0), "sent": stats.get("sent", 0)})

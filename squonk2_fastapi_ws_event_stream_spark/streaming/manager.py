@@ -9,16 +9,18 @@ and DELETE stops it synchronously (better than the reference, where an
 idle consumer lingers until the next message or a POISON pill,
 app/app.py:677-717; SURVEY §3.4).
 
-Delivery: each query runs `foreachBatch` → an in-process hub queue that the
-socket layer drains (the WebSocket-sink pattern of SURVEY §2.7 K1; the
-actual WS framing needs the `websockets` package, absent in this container —
-the hub is the seam where it plugs in, see api.py).
+Delivery: each query runs `foreachBatch` → an in-process hub queue of wire
+strings that the WebSocket layer (websocket.py) drains into text frames
+(the WebSocket-sink pattern of SURVEY §2.7 K1). Every stop, whoever asks
+for it, goes through `stop_consumer_handle`.
 """
 
 from __future__ import annotations
 
 import queue
+import shutil
 import threading
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -26,17 +28,7 @@ from pyspark.sql import SparkSession
 from ..sources.eventstream import EventStreamDataSource
 from .pipeline import annotate
 
-
-@dataclass
-class Delivery:
-    """One enriched message handed to the socket layer."""
-
-    key: str
-    offset: int
-    out: str
-
-
-# The hub hands the socket layer CHUNKS (lists of Delivery), one queue
+# The hub hands the socket layer CHUNKS (lists of wire strings), one queue
 # item per micro-batch slice, so a 20k-message replay batch costs ~10
 # queue operations instead of 20k — per-row Queue.put/get was the
 # per-connection delivery ceiling (round-6 task #6). Backpressure:
@@ -49,8 +41,14 @@ HUB_MAX_CHUNKS = 16
 @dataclass
 class ConsumerHandle:
     stream: str
-    hub: "queue.Queue[list[Delivery] | None]"
+    hub: "queue.Queue[list[str] | None]"
+    # Unique per start and removed on stop: every start seeks from the
+    # client's parameters, so no consumer ever resumes from a checkpoint.
+    checkpoint: str
     query: object = None
+    # Set once the consumer will deliver nothing more: its POISON pill
+    # arrived or a stop began. A query that ends without it failed.
+    ended: bool = False
     stats: dict = field(default_factory=lambda: {"received": 0, "sent": 0})
 
 
@@ -71,13 +69,13 @@ class StreamManager:
         starting_datetime: str | None = None,
     ) -> ConsumerHandle:
         """Start (or replace) the single consumer for a stream."""
-        with self._lock:
-            old = self._consumers.pop(stream, None)
-        if old is not None:
-            self.stop_consumer_handle(old)
+        self.stop_consumer(stream)
 
-        hub: queue.Queue = queue.Queue(maxsize=HUB_MAX_CHUNKS)
-        handle = ConsumerHandle(stream=stream, hub=hub)
+        handle = ConsumerHandle(
+            stream=stream,
+            hub=queue.Queue(maxsize=HUB_MAX_CHUNKS),
+            checkpoint=f"{self.checkpoint_root}/{stream}-{uuid.uuid4().hex}",
+        )
 
         reader = self.spark.readStream.format("eventstream").option(
             "path", self.log_root
@@ -94,95 +92,71 @@ class StreamManager:
         # collects only the final delivery rows (SURVEY §2.7 K1: delivery is
         # per-connection and driver-side, matching the reference's single
         # socket per stream).
-        relayed = annotate(reader.load())
-
-        manager = self
+        relayed = annotate(reader.load()).select("offset", "out", "is_poison")
 
         def push_batch(batch_df, batch_id):  # runs on the driver per micro-batch
-            # Arrow-batched collect (toPandas) + column lists: the old
-            # Row-object loop with one hub.put per message was the
-            # per-connection ceiling; now the whole batch crosses as a
-            # few column .tolist() calls and ~batch/CHUNK_ROWS queue ops.
-            pdf = batch_df.toPandas()
-            if len(pdf) == 0:
+            if handle.ended:
                 return
-            pdf = pdf.sort_values("offset", ignore_index=True)
-            keys = pdf["key"].tolist()
-            offsets = pdf["offset"].tolist()
-            outs = pdf["out"].tolist()
-            poisons = pdf["is_poison"].tolist()
+            # One Arrow-batched collect; the wire strings cross as a column
+            # and reach the hub in ~batch/CHUNK_ROWS queue operations.
+            tbl = batch_df.toArrow().sort_by("offset")
+            outs = tbl["out"].to_pylist()
+            poisons = tbl["is_poison"].to_pylist()
             try:
                 # Never forwarded; stops the consumer
                 # (app/app.py:463-467,520-524). Rows after the pill are
-                # neither counted nor delivered, as before.
+                # neither counted nor delivered.
                 cut = poisons.index(True)
                 poisoned = True
             except ValueError:
                 cut = len(outs)
                 poisoned = False
             handle.stats["received"] += cut + (1 if poisoned else 0)
-            chunk = [
-                Delivery(key=k, offset=o, out=s)
-                for k, o, s in zip(keys[:cut], offsets[:cut], outs[:cut])
-                if s is not None
-            ]
+            chunk = [s for s in outs[:cut] if s is not None]
             for i in range(0, len(chunk), CHUNK_ROWS):
                 piece = chunk[i : i + CHUNK_ROWS]
-                hub.put(piece)
+                handle.hub.put(piece)
                 handle.stats["sent"] += len(piece)
             if poisoned:
-                hub.put(None)  # end-of-stream sentinel for the socket layer
-                # Stop by handle identity, not by name: a reconnect may have
-                # already replaced this stream's consumer, and a by-name stop
-                # from this (stale) batch would kill the replacement.
-                threading.Thread(
-                    target=manager.stop_consumer_if_current,
-                    args=(stream, handle),
-                    daemon=True,
-                ).start()
+                # The socket layer closes on the sentinel and its teardown
+                # stops this handle.
+                handle.ended = True
+                handle.hub.put(None)
 
-        query = (
+        handle.query = (
             relayed.writeStream.foreachBatch(push_batch)
-            .option(
-                "checkpointLocation",
-                f"{self.checkpoint_root}/{stream}-{id(handle):x}",
-            )
+            .option("checkpointLocation", handle.checkpoint)
             .trigger(processingTime="500 milliseconds")
             .start()
         )
-        handle.query = query
         with self._lock:
             self._consumers[stream] = handle
         return handle
 
-    def stop_consumer(self, stream: str) -> bool:
-        with self._lock:
-            handle = self._consumers.pop(stream, None)
-        if handle is None:
-            return False
-        self.stop_consumer_handle(handle)
-        return True
+    def stop_consumer(self, stream: str, handle: ConsumerHandle | None = None) -> None:
+        """Stop `stream`'s consumer.
 
-    def stop_consumer_if_current(self, stream: str, handle: ConsumerHandle) -> bool:
-        """Stop `stream`'s consumer only if it is still `handle`.
-
-        Teardown paths that captured a handle earlier (a finishing consume
-        request, the poison-stop thread) must not stop a replacement
-        consumer that a newer request has since registered under the same
-        stream name; they still stop their own (now-unregistered) handle so
-        its query and hub are released.
+        Without `handle`, stop whatever is registered. With `handle`, stop
+        that handle, and deregister it only if it is still current: a
+        teardown that captured its handle earlier (a finished socket) must
+        not stop a replacement consumer that a newer request has since
+        registered under the same stream name.
         """
         with self._lock:
-            if self._consumers.get(stream) is handle:
-                self._consumers.pop(stream)
-        self.stop_consumer_handle(handle)
-        return True
+            current = self._consumers.get(stream)
+            if handle is None or current is handle:
+                self._consumers.pop(stream, None)
+                handle = current
+        if handle is not None:
+            self.stop_consumer_handle(handle)
 
     @staticmethod
     def stop_consumer_handle(handle: ConsumerHandle) -> None:
+        handle.ended = True
         try:
             if handle.query is not None:
                 handle.query.stop()
+                shutil.rmtree(handle.checkpoint, ignore_errors=True)
         finally:
             try:
                 handle.hub.put_nowait(None)

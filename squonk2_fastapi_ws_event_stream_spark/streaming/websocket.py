@@ -10,6 +10,7 @@ send site is ``websocket.send_text`` at :496-508). Close-code parity:
     1000  unknown EventStream uuid       (app/app.py:287-291)
     1013  backing stream does not exist  (app/app.py:314-318)
     1000  normal end (POISON / server stop)
+    1011  the consumer's query failed; the reason is its exception
 
 Like the reference, the server ACCEPTS the socket first (app/app.py:212)
 and then closes with the mapped code, so clients always observe a completed
@@ -30,10 +31,12 @@ from __future__ import annotations
 
 import base64
 import hashlib
+import queue
 import socket
 import socketserver
 import struct
 import threading
+import time
 import urllib.parse
 from dataclasses import dataclass
 from datetime import datetime
@@ -46,7 +49,12 @@ OP_CONT, OP_TEXT, OP_BINARY, OP_CLOSE, OP_PING, OP_PONG = 0x0, 0x1, 0x2, 0x8, 0x
 
 CLOSE_NORMAL = 1000
 CLOSE_PROTOCOL_ERROR = 1002
+CLOSE_INTERNAL_ERROR = 1011
 CLOSE_TRY_AGAIN_LATER = 1013
+
+# A close frame is a control frame: at most 125 payload bytes, two of them
+# the code (RFC 6455 §5.5).
+MAX_CLOSE_REASON_BYTES = 123
 
 
 def accept_key(client_key: str) -> str:
@@ -104,7 +112,10 @@ def read_frame(rfile) -> tuple[int, bytes]:
 
 
 def close_payload(code: int, reason: str = "") -> bytes:
-    return struct.pack("!H", code) + reason.encode("utf-8")
+    """Close-frame payload; the reason is cut to the RFC limit on a UTF-8
+    character boundary."""
+    raw = reason.encode("utf-8")[:MAX_CLOSE_REASON_BYTES]
+    return struct.pack("!H", code) + raw.decode("utf-8", "ignore").encode("utf-8")
 
 
 def parse_close(payload: bytes) -> tuple[int | None, str]:
@@ -116,7 +127,7 @@ def parse_close(payload: bytes) -> tuple[int | None, str]:
 
 @dataclass
 class ConsumeParams:
-    """The C5 query params (same validation as the HTTP consume path).
+    """The C5 query params, validated as the reference validates them.
 
     ``timeout_s`` defaults to None — NO idle disconnect. The reference WS
     endpoint holds a quiet stream's connection open indefinitely until
@@ -285,8 +296,6 @@ class _WsHandler(socketserver.StreamRequestHandler):
 
     # -- the consume path (C5) --------------------------------------------
     def _consume(self, es_uuid: str, query: str) -> None:
-        import queue as _q
-
         server = self.server
         params = ConsumeParams.from_query(query)
         if params.error:
@@ -329,18 +338,17 @@ class _WsHandler(socketserver.StreamRequestHandler):
         rt = threading.Thread(target=reader, daemon=True)
         rt.start()
 
-        import time as _time
-
         delivered = 0
+        code, reason = CLOSE_NORMAL, ""
         try:
             # Poll the hub in short ticks so a client close frame (observed
-            # by the reader thread) interrupts delivery promptly even when
-            # the stream is idle. With no timeout_s (the default — the
-            # reference holds quiet streams open until POISON or client
-            # close) the loop waits forever; a finite timeout_s bounds the
-            # idle wait for test/drain clients.
+            # by the reader thread) or a failed query interrupts delivery
+            # promptly even when the stream is idle. With no timeout_s (the
+            # default — the reference holds quiet streams open until POISON
+            # or client close) the loop waits forever; a finite timeout_s
+            # bounds the idle wait for test/drain clients.
             idle_deadline = (
-                _time.monotonic() + params.timeout_s
+                time.monotonic() + params.timeout_s
                 if params.timeout_s is not None
                 else None
             )
@@ -349,8 +357,12 @@ class _WsHandler(socketserver.StreamRequestHandler):
                     break
                 try:
                     chunk = handle.hub.get(timeout=0.25)
-                except _q.Empty:
-                    if idle_deadline is not None and _time.monotonic() >= idle_deadline:
+                except queue.Empty:
+                    if not handle.ended and not handle.query.isActive:
+                        # Died without a stop or a pill: no sentinel comes.
+                        code, reason = CLOSE_INTERNAL_ERROR, str(handle.query.exception())
+                        break
+                    if idle_deadline is not None and time.monotonic() >= idle_deadline:
                         break
                     continue
                 if chunk is None:  # poison / consumer stop sentinel
@@ -362,16 +374,16 @@ class _WsHandler(socketserver.StreamRequestHandler):
                     if params.max_events is None
                     else chunk[: params.max_events - delivered]
                 )
-                self._send_text_many([d.out for d in take])
+                self._send_text_many(take)
                 delivered += len(take)
                 if idle_deadline is not None:
-                    idle_deadline = _time.monotonic() + params.timeout_s
-            self._close(CLOSE_NORMAL, "")
+                    idle_deadline = time.monotonic() + params.timeout_s
+            self._close(code, reason)
         except (ConnectionError, OSError):
             pass  # WebSocketDisconnect analog (app/app.py:503-508): drop
         finally:
             client_closed.set()
-            server.manager.stop_consumer_if_current(rec["routing_key"], handle)
+            server.manager.stop_consumer(rec["routing_key"], handle)
 
 
 class EventStreamWsServer(socketserver.ThreadingTCPServer):

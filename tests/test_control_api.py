@@ -1,9 +1,11 @@
-"""Control-plane API parity: C1-C5 shapes and error codes (SURVEY §2.8),
-driven through the Flask test client with a live StreamManager."""
+"""Control-plane API parity: C1-C4 shapes and error codes (SURVEY §2.8),
+driven through the Flask test client with a live StreamManager, plus the
+manager's consumer lifecycle. The consume path (C5) is WebSocket only and
+is tested in test_websocket.py."""
 
 from __future__ import annotations
 
-import json
+import os
 
 import pytest
 
@@ -64,76 +66,9 @@ def test_delete_unknown_id_404(stack):  # C4 404 path (app/app.py:688-694)
     assert r.status_code == 404
 
 
-def test_consume_unknown_uuid_404(stack):  # WS close 1000 analog
-    client, *_ = stack
-    r = client.get("/event-stream/nonesuch/consume")
-    assert r.status_code == 404
-    assert "unknown EventStream" in r.get_json()["detail"]
-
-
-def test_consume_missing_backing_stream_503(stack):  # WS close 1013 analog
-    client, registry, *_ = stack
-    rec = registry.create("ghost")
-    r = client.get(f"/event-stream/{rec['uuid']}/consume")
-    assert r.status_code == 503
-
-
-def test_consume_mutually_exclusive_params_400(stack):  # WS close 1002 analog
-    client, registry, manager, log_root = stack
-    EventLogWriter(log_root, "charges").publish('{"a": 1}', BASE_TS)
-    rec = registry.create("charges")
-    r = client.get(
-        f"/event-stream/{rec['uuid']}/consume"
-        "?stream_from_ordinal=1&stream_from_timestamp=123"
-    )
-    assert r.status_code == 400
-    assert "more than one 'stream_from_'" in r.get_json()["detail"]
-
-
-def test_consume_end_to_end_with_replay(stack):  # C5 happy path + t1-smoke shape
-    client, registry, manager, log_root = stack
-    w = EventLogWriter(log_root, "charges")
-    for i in range(5):
-        w.publish(
-            '{"message_type": "t", "message_body": {"sqn": %d}}' % i,
-            timestamp_ms=BASE_TS + i * 1000,
-        )
-    rec = registry.create("charges")
-    r = client.get(
-        f"/event-stream/{rec['uuid']}/consume"
-        "?stream_from_ordinal=1&max_events=3&timeout_s=60"
-    )
-    assert r.status_code == 200
-    lines = [json.loads(line) for line in r.text.strip().splitlines()]
-    # exclusive seek from 1 → ordinals 2,3,4 with enrichment
-    # (ordinal n carries the n-th published message: sqn = n-1,
-    # broker ts = BASE_TS + (n-1)*1000)
-    assert [m["ess_ordinal"] for m in lines] == [2, 3, 4]
-    assert all(m["ess_timestamp"] == BASE_TS + (m["ess_ordinal"] - 1) * 1000 for m in lines)
-    assert all(m["message_body"]["sqn"] == m["ess_ordinal"] - 1 for m in lines)
-
-
-def test_consume_poison_stops_consumer(stack):
-    client, registry, manager, log_root = stack
-    w = EventLogWriter(log_root, "charges")
-    w.publish('{"message_type": "t", "message_body": {}}', BASE_TS)
-    w.publish("POISON", BASE_TS + 1000)
-    w.publish('{"never": "delivered"}', BASE_TS + 2000)
-    rec = registry.create("charges")
-    r = client.get(
-        f"/event-stream/{rec['uuid']}/consume"
-        "?stream_from_ordinal=0&max_events=10&timeout_s=60"
-    )
-    assert r.status_code == 200
-    lines = [json.loads(line) for line in r.text.strip().splitlines()]
-    # only the pre-poison message (ordinal 1) arrives; POISON is never forwarded
-    assert len(lines) == 1
-    assert lines[0]["ess_ordinal"] == 1
-
-
-def test_stale_teardown_does_not_stop_replacement_consumer(stack):
-    # A teardown path holding an old handle (finished request, poison-stop
-    # thread) must not knock out a consumer that replaced it by name.
+def test_stale_teardown_does_not_stop_replacement_consumer(stack, tmp_path):
+    # A teardown path holding an old handle (a finished socket) must not
+    # knock out a consumer that replaced it by name.
     import queue
 
     from squonk2_fastapi_ws_event_stream_spark.streaming.manager import ConsumerHandle
@@ -149,15 +84,65 @@ def test_stale_teardown_does_not_stop_replacement_consumer(stack):
             self.stopped = True
             self.isActive = False
 
-    old = ConsumerHandle(stream="s", hub=queue.Queue(), query=_FakeQuery())
-    new = ConsumerHandle(stream="s", hub=queue.Queue(), query=_FakeQuery())
+    def fake_handle(name):
+        return ConsumerHandle(
+            stream="s",
+            hub=queue.Queue(),
+            checkpoint=str(tmp_path / name),
+            query=_FakeQuery(),
+        )
+
+    old, new = fake_handle("old"), fake_handle("new")
     manager._consumers["s"] = new
 
-    manager.stop_consumer_if_current("s", old)
+    manager.stop_consumer("s", old)
     assert old.query.stopped  # the stale handle itself is released
+    assert old.hub.get_nowait() is None  # and its socket loop told to end
     assert not new.query.stopped  # the replacement keeps running
     assert manager._consumers["s"] is new
 
-    manager.stop_consumer_if_current("s", new)
+    manager.stop_consumer("s", new)
     assert new.query.stopped
     assert "s" not in manager._consumers
+
+    # without a handle: stop whatever is registered
+    newest = fake_handle("newest")
+    manager._consumers["s"] = newest
+    manager.stop_consumer("s")
+    assert newest.query.stopped
+    assert "s" not in manager._consumers
+
+
+def test_stopped_consumers_leave_no_checkpoint_state(stack):
+    """Every start gets a fresh checkpoint directory and every stop removes
+    it, so the checkpoint root does not grow with the number of starts."""
+    _, _, manager, log_root = stack
+    EventLogWriter(log_root, "charges").publish('{"a": 1}', BASE_TS)
+    for _ in range(3):
+        handle = manager.start_consumer("charges", starting_ordinal=0)
+        assert os.path.isdir(handle.checkpoint)
+        manager.stop_consumer("charges")
+    manager.start_consumer("charges", starting_ordinal=0)
+    manager.stop_all()
+    root = manager.checkpoint_root
+    assert not os.path.isdir(root) or os.listdir(root) == []
+
+
+def test_health_probe_runs_no_spark_job(stack, spark):
+    """The probe checks the JVM, it does not run a job: perfbench and
+    liveness probes poll it while consumers are starting."""
+    client, _, manager, _ = stack
+    sc = spark.sparkContext
+    group = "health-probe-test"
+    sc.setJobGroup(group, "health probe")  # thread-local: the test client's thread
+    try:
+        r = client.get("/event-stream/health/")
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        spark.range(3).count()  # the probe can see a job when one runs
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert r.status_code == 200
+    assert r.get_json() == {"spark": True, "consumers": {}}
+    assert jobs == []

@@ -16,6 +16,7 @@ from squonk2_fastapi_ws_event_stream_spark.sources.eventstream import EventLogWr
 from squonk2_fastapi_ws_event_stream_spark.sources.registry import Registry
 from squonk2_fastapi_ws_event_stream_spark.streaming.manager import StreamManager
 from squonk2_fastapi_ws_event_stream_spark.streaming.websocket import (
+    CLOSE_INTERNAL_ERROR,
     CLOSE_NORMAL,
     CLOSE_PROTOCOL_ERROR,
     CLOSE_TRY_AGAIN_LATER,
@@ -82,10 +83,13 @@ def test_ws_consume_with_ordinal_replay(ws_stack):
         if text is not None:
             msgs.append(json.loads(text))
     c.shutdown()
+    # exclusive seek from 1 → ordinals 2,3,4; ordinal n carries the n-th
+    # published message (sqn = n-1, broker ts = BASE_TS + (n-1)*1000)
     assert [m["ess_ordinal"] for m in msgs] == [2, 3, 4]
     assert all(
         m["ess_timestamp"] == BASE_TS + (m["ess_ordinal"] - 1) * 1000 for m in msgs
     )
+    assert all(m["message_body"]["sqn"] == m["ess_ordinal"] - 1 for m in msgs)
     assert close[0] == CLOSE_NORMAL
 
 
@@ -170,6 +174,96 @@ def test_ws_poison_terminates_with_close(ws_stack):
     c.shutdown()
     assert [m["ess_ordinal"] for m in msgs] == [1]
     assert close[0] == CLOSE_NORMAL
+
+
+def test_ws_failed_query_closes_1011(ws_stack):
+    """A consumer whose query dies must not leave its socket open and
+    silent: the server closes with 1011 and the query's error as reason."""
+    import os
+    import time
+
+    server, registry, manager, log_root = ws_stack
+    EventLogWriter(log_root, "charges").publish(
+        '{"message_type": "t", "message_body": {}}', BASE_TS
+    )
+    rec = registry.create("charges")
+    c = WsClient(
+        "127.0.0.1",
+        server.port,
+        f"/event-stream/{rec['uuid']}?stream_from_ordinal=0",
+        timeout=60,
+    )
+    text, close = c.recv_text_or_close()
+    assert text is not None and json.loads(text)["ess_ordinal"] == 1
+    # fault injection: a line the source cannot parse kills the query
+    with open(os.path.join(log_root, "charges", "log.jsonl"), "a") as f:
+        f.write("not json\n")
+    c.sock.settimeout(30)
+    t0 = time.monotonic()
+    while close is None:
+        text, close = c.recv_text_or_close()
+        assert text is None, text
+    c.shutdown()
+    assert time.monotonic() - t0 < 30
+    code, reason = close
+    assert code == CLOSE_INTERNAL_ERROR
+    assert reason and len(reason.encode("utf-8")) <= 123
+
+
+def test_ws_close_reason_is_cut_to_rfc_limit(ws_stack):
+    server, *_ = ws_stack
+    uuid = "u" * 200  # echoed into the close reason
+    c = WsClient("127.0.0.1", server.port, f"/event-stream/{uuid}")
+    opcode, payload = c.recv()
+    c.shutdown()
+    assert opcode == OP_CLOSE and len(payload) == 125
+    assert parse_close(payload) == (
+        CLOSE_NORMAL,
+        ("Connect for unknown EventStream " + uuid)[:123],
+    )
+
+
+def test_es_client_prints_messages_and_byte_stats(ws_stack, capsys):
+    """es_client.py, the listener-tool analog, against a live server."""
+    import es_client
+
+    server, registry, manager, log_root = ws_stack
+    w = EventLogWriter(log_root, "charges")
+    w.publish('{"message_type": "t", "message_body": {"sqn": 0}}', BASE_TS)
+    w.publish("hello", BASE_TS + 1000)
+    rec = registry.create("charges")
+    es_client.main(
+        [
+            f"ws://127.0.0.1:{server.port}",
+            rec["uuid"],
+            "-o",
+            "0",
+            "--max-events",
+            "2",
+            "--timeout",
+            "60",
+        ]
+    )
+    out, err = capsys.readouterr()
+    assert out.splitlines() == [
+        f"[1] {BASE_TS} t {{'sqn': 0}}",
+        f"[2] {BASE_TS + 1000} hello []",
+    ]
+    frames = [
+        '{"message_type": "t", "message_body": {"sqn": 0}, '
+        f'"ess_ordinal": 1, "ess_timestamp": {BASE_TS}}}',
+        f"hello|ordinal: 2|timestamp: {BASE_TS + 1000}",
+    ]
+    sizes = [len(f.encode("utf-8")) for f in frames]
+    err_lines = err.strip().splitlines()
+    assert err_lines[-2] == "closed: (1000, '')"
+    assert json.loads(err_lines[-1]) == {
+        "total_bytes": sum(sizes),
+        "total_messages": 2,
+        "min": min(sizes),
+        "max": max(sizes),
+        "mean": round(sum(sizes) / 2),
+    }
 
 
 def test_ws_client_close_releases_consumer(ws_stack):
