@@ -781,8 +781,7 @@ def _ws_delivery_bench(spark) -> dict:
         client = WsClient(
             "127.0.0.1",
             server.port,
-            f"/event-stream/{rec['uuid']}"
-            f"?stream_from_ordinal=0&max_events={n}&timeout_s=120",
+            f"/event-stream/{rec['uuid']}?stream_from_ordinal=0",
             timeout=300,
         )
         got = 0

@@ -2,7 +2,9 @@
 """WebSocket consume client — the analog of the reference's manual test
 listener (ws_listener.py): connects to the public WebSocket API over
 RFC 6455, parses both wire formats, prints per-message lines and session
-byte stats (ws_listener.py:32-48,54-81).
+byte stats (ws_listener.py:32-48,54-81). The server reads only the
+``stream_from_*`` params; ``--max-events`` and ``--timeout`` (idle seconds)
+are client-side limits, after which the client closes with 1000.
 
 Usage:
     python es_client.py ws://localhost:8080 <uuid> [-o ORDINAL | -t MS | -d DT]
@@ -82,7 +84,7 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--timeout", type=float, default=10.0)
     args = ap.parse_args(argv)
 
-    params: dict = {"max_events": args.max_events, "timeout_s": args.timeout}
+    params: dict = {}
     if args.ordinal is not None:
         params["stream_from_ordinal"] = args.ordinal
     if args.timestamp is not None:
@@ -93,18 +95,24 @@ def main(argv: list[str] | None = None) -> None:
     stats = ByteStats()
     u = urllib.parse.urlparse(args.base_url)
     resource = f"/event-stream/{args.uuid}?" + urllib.parse.urlencode(params)
-    # client-side timeout: the server's timeout_s bounds the idle wait,
-    # but a hung/unreachable server must not block forever
-    c = WsClient(u.hostname, u.port or 80, resource, timeout=args.timeout + 30)
+    c = WsClient(u.hostname, u.port or 80, resource, timeout=args.timeout)
+    close = None
     try:
-        while True:
-            text, close = c.recv_text_or_close()
-            if text is None:
-                print(f"closed: {close}", file=sys.stderr)
+        while close is None and stats.total_messages < args.max_events:
+            try:
+                text, close = c.recv_text_or_close()
+            except TimeoutError:
+                c.rfile = c.sock.makefile("rb")  # a timed-out file refuses reads
                 break
-            stats.add(len(text.encode("utf-8")))
-            m = parse_message(text)
-            print(f"[{m['ordinal']}] {m['timestamp']} {m['message_type']} {m['body']}")
+            if text is not None:
+                stats.add(len(text.encode("utf-8")))
+                m = parse_message(text)
+                print(f"[{m['ordinal']}] {m['timestamp']} {m['message_type']} {m['body']}")
+        if close is None:
+            c.close()
+            while close is None:  # frames already in flight are dropped
+                _, close = c.recv_text_or_close()
+        print(f"closed: {close}", file=sys.stderr)
     finally:
         c.shutdown()
     print(json.dumps(stats.summary()), file=sys.stderr)

@@ -285,6 +285,10 @@ def _write(
                 verdicts = {**old, **verdicts}
         except (OSError, json.JSONDecodeError):
             pass
+        if not flagged_now:
+            # An old relay verdict was value-matched to another record;
+            # keep `verdicts` consistent with `streaming_check.flagged`.
+            verdicts.pop("_streaming", None)
     out = {
         "_contract": (
             "Round-open driver-record reconciliation: each verdict solo-"

@@ -14,6 +14,8 @@ stdlib, streaming/websocket.py) on --ws-port. Both front one SparkSession.
 from __future__ import annotations
 
 import argparse
+import signal
+import sys
 
 from squonk2_fastapi_ws_event_stream_spark.session import get_spark
 from squonk2_fastapi_ws_event_stream_spark.sources.registry import Registry
@@ -52,15 +54,11 @@ def main() -> None:
 
     # Graceful shutdown on SIGTERM — the k8s pre-stop / probes analog
     # (reference: hooks/pre-stop-hook.sh writes a poison file the probes
-    # read). Here the handler stops consumers synchronously so in-flight
-    # StreamingQueries checkpoint cleanly before the process exits.
-    import signal
-    import sys as _sys
-
+    # read). The handler only raises SystemExit, so the `finally` below is
+    # the one teardown: it stops consumers synchronously before the
+    # process exits.
     def _graceful(_signum, _frame):
-        ws_server.stop()
-        manager.stop_all()
-        _sys.exit(0)
+        sys.exit(0)
 
     signal.signal(signal.SIGTERM, _graceful)
     try:

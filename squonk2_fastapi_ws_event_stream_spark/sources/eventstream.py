@@ -462,6 +462,3 @@ def enforce_retention(
             os.replace(tmp, path)
     return expired
 
-
-def register(spark) -> None:
-    spark.dataSource.register(EventStreamDataSource)

@@ -11,8 +11,9 @@ app/app.py:677-717; SURVEY §3.4).
 
 Delivery: each query runs `foreachBatch` → an in-process hub queue of wire
 strings that the WebSocket layer (websocket.py) drains into text frames
-(the WebSocket-sink pattern of SURVEY §2.7 K1). Every stop, whoever asks
-for it, goes through `stop_consumer_handle`.
+(the WebSocket-sink pattern of SURVEY §2.7 K1). Every stop goes through
+`stop_consumer_handle` and puts nothing on the hub: the socket layer ends
+once the hub is drained and the query is no longer active.
 """
 
 from __future__ import annotations
@@ -94,6 +95,17 @@ class StreamManager:
         # socket per stream).
         relayed = annotate(reader.load()).select("offset", "out", "is_poison")
 
+        def offer(item) -> bool:
+            # A stop sets `ended`, then waits for this batch: give up within
+            # a tick rather than wait on a socket that may be gone.
+            while not handle.ended:
+                try:
+                    handle.hub.put(item, timeout=0.25)
+                    return True
+                except queue.Full:
+                    pass
+            return False
+
         def push_batch(batch_df, batch_id):  # runs on the driver per micro-batch
             if handle.ended:
                 return
@@ -115,13 +127,14 @@ class StreamManager:
             chunk = [s for s in outs[:cut] if s is not None]
             for i in range(0, len(chunk), CHUNK_ROWS):
                 piece = chunk[i : i + CHUNK_ROWS]
-                handle.hub.put(piece)
+                if not offer(piece):
+                    return
                 handle.stats["sent"] += len(piece)
             if poisoned:
                 # The socket layer closes on the sentinel and its teardown
                 # stops this handle.
+                offer(None)
                 handle.ended = True
-                handle.hub.put(None)
 
         handle.query = (
             relayed.writeStream.foreachBatch(push_batch)
@@ -153,15 +166,8 @@ class StreamManager:
     @staticmethod
     def stop_consumer_handle(handle: ConsumerHandle) -> None:
         handle.ended = True
-        try:
-            if handle.query is not None:
-                handle.query.stop()
-                shutil.rmtree(handle.checkpoint, ignore_errors=True)
-        finally:
-            try:
-                handle.hub.put_nowait(None)
-            except queue.Full:
-                pass
+        handle.query.stop()
+        shutil.rmtree(handle.checkpoint, ignore_errors=True)
 
     def snapshot(self) -> dict[str, dict]:
         """Consistent per-stream health view (used by /event-stream/health/)."""
@@ -169,7 +175,7 @@ class StreamManager:
             handles = dict(self._consumers)
         return {
             stream: {
-                "active": bool(h.query is not None and h.query.isActive),
+                "active": h.query.isActive,
                 "received": h.stats["received"],
                 "sent": h.stats["sent"],
             }

@@ -9,7 +9,7 @@ send site is ``websocket.send_text`` at :496-508). Close-code parity:
     1002  >1 ``stream_from_`` param      (app/app.py:269-278)
     1000  unknown EventStream uuid       (app/app.py:287-291)
     1013  backing stream does not exist  (app/app.py:314-318)
-    1000  normal end (POISON / server stop)
+    1000  normal end (POISON / server stop / client close)
     1011  the consumer's query failed; the reason is its exception
 
 Like the reference, the server ACCEPTS the socket first (app/app.py:212)
@@ -36,7 +36,6 @@ import socket
 import socketserver
 import struct
 import threading
-import time
 import urllib.parse
 from dataclasses import dataclass
 from datetime import datetime
@@ -129,17 +128,15 @@ def parse_close(payload: bytes) -> tuple[int | None, str]:
 class ConsumeParams:
     """The C5 query params, validated as the reference validates them.
 
-    ``timeout_s`` defaults to None — NO idle disconnect. The reference WS
-    endpoint holds a quiet stream's connection open indefinitely until
-    POISON or client close (app/app.py:496-508); a finite timeout_s is an
-    opt-in bound for test/drain clients.
+    Only the three ``stream_from_*`` params are read; any other is ignored
+    (app/app.py:222-278). There is no server-side count or idle timeout: a
+    quiet stream stays open until POISON, a server stop or a client close
+    (app/app.py:496-508). Clients set their own limits (es_client.py).
     """
 
     starting_ordinal: int | None = None
     starting_timestamp_ms: int | None = None
     starting_datetime: str | None = None
-    max_events: int | None = None
-    timeout_s: float | None = None
     error: str | None = None
 
     @classmethod
@@ -179,15 +176,6 @@ class ConsumeParams:
         if n_given > 1:
             # app/app.py:269-278 — exact reference message
             p.error = "Cannot provide more than one 'stream_from_' variable"
-        if p.error:
-            return p
-        try:
-            if one("max_events") is not None:
-                p.max_events = int(one("max_events"))
-            if one("timeout_s") is not None:
-                p.timeout_s = float(one("timeout_s"))
-        except ValueError as exc:
-            p.error = f"invalid parameter: {exc}"
         return p
 
 
@@ -278,11 +266,6 @@ class _WsHandler(socketserver.StreamRequestHandler):
         except OSError:
             pass
 
-    def _send_text(self, text: str) -> None:
-        with self._wlock:
-            self.wfile.write(encode_frame(OP_TEXT, text.encode("utf-8")))
-            self.wfile.flush()
-
     def _send_text_many(self, texts: list[str]) -> None:
         """Bulk delivery: encode every frame, then ONE write + flush under
         one lock acquisition — the per-frame write/flush was the other
@@ -338,46 +321,25 @@ class _WsHandler(socketserver.StreamRequestHandler):
         rt = threading.Thread(target=reader, daemon=True)
         rt.start()
 
-        delivered = 0
         code, reason = CLOSE_NORMAL, ""
         try:
             # Poll the hub in short ticks so a client close frame (observed
-            # by the reader thread) or a failed query interrupts delivery
-            # promptly even when the stream is idle. With no timeout_s (the
-            # default — the reference holds quiet streams open until POISON
-            # or client close) the loop waits forever; a finite timeout_s
-            # bounds the idle wait for test/drain clients.
-            idle_deadline = (
-                time.monotonic() + params.timeout_s
-                if params.timeout_s is not None
-                else None
-            )
+            # by the reader thread) interrupts an idle stream promptly.
+            # Besides a client close and the POISON sentinel there is one
+            # end rule: the hub is drained and the query is no longer
+            # active. A query that ended without a stop or a pill failed.
             while not client_closed.is_set():
-                if params.max_events is not None and delivered >= params.max_events:
-                    break
                 try:
                     chunk = handle.hub.get(timeout=0.25)
                 except queue.Empty:
-                    if not handle.ended and not handle.query.isActive:
-                        # Died without a stop or a pill: no sentinel comes.
+                    if handle.query.isActive or not handle.hub.empty():
+                        continue
+                    if not handle.ended:
                         code, reason = CLOSE_INTERNAL_ERROR, str(handle.query.exception())
-                        break
-                    if idle_deadline is not None and time.monotonic() >= idle_deadline:
-                        break
-                    continue
-                if chunk is None:  # poison / consumer stop sentinel
                     break
-                # One micro-batch slice per hub item: bulk-encode up to
-                # the max_events boundary and write once.
-                take = (
-                    chunk
-                    if params.max_events is None
-                    else chunk[: params.max_events - delivered]
-                )
-                self._send_text_many(take)
-                delivered += len(take)
-                if idle_deadline is not None:
-                    idle_deadline = time.monotonic() + params.timeout_s
+                if chunk is None:  # the POISON pill
+                    break
+                self._send_text_many(chunk)  # one micro-batch slice, one write
             self._close(code, reason)
         except (ConnectionError, OSError):
             pass  # WebSocketDisconnect analog (app/app.py:503-508): drop
@@ -461,9 +423,6 @@ class WsClient:
         if opcode == OP_CLOSE:
             return None, parse_close(payload)
         return self.recv_text_or_close()  # skip ping/pong
-
-    def send_text(self, text: str) -> None:
-        self.sock.sendall(encode_frame(OP_TEXT, text.encode("utf-8"), mask=True))
 
     def ping(self, payload: bytes = b"hi") -> None:
         self.sock.sendall(encode_frame(OP_PING, payload, mask=True))

@@ -284,6 +284,33 @@ def test_streaming_reconcile_verdict_is_value_matched(capsys):
     )
 
 
+def test_keep_verdicts_drops_a_stale_streaming_verdict(tmp_path, monkeypatch):
+    """--keep-verdicts merges old per-query verdicts forward, but a relay
+    verdict was value-matched to an older record: when this run does not
+    flag the relay, the ledger carries no _streaming verdict."""
+    from scripts import reconcile_driver_bench as rdb
+
+    path = tmp_path / "BENCH_RECONCILE.json"
+    monkeypatch.setattr(bench, "RECONCILE_PATH", str(path))
+    q_old = {"suite_sec": 2.5, "solo_sec": 1.1, "verdict": "host_window"}
+    stale = {"record_msgs_per_sec": 15000, "verdict": "host_window"}
+    path.write_text(json.dumps({"verdicts": {"q_old": q_old, "_streaming": stale}}))
+
+    rdb._write("BENCH_FULL.json", {"value": 100.0}, 13, {}, 40000, 40000, keep=True)
+    out = json.loads(path.read_text())
+    assert out["streaming_check"]["flagged"] is False
+    assert out["verdicts"] == {"q_old": q_old}
+
+    # a run that flags the relay keeps its own verdict
+    fresh = {"record_msgs_per_sec": 14000, "verdict": "host_window"}
+    rdb._write(
+        "BENCH_r13.json", {"value": 90.0}, 13, {"_streaming": fresh}, 14000, 40000, keep=True
+    )
+    out = json.loads(path.read_text())
+    assert out["streaming_check"]["flagged"] is True
+    assert out["verdicts"] == {"q_old": q_old, "_streaming": fresh}
+
+
 def test_retry_clears_a_transient_spike_and_rewrites_the_record(capsys):
     """A query that spikes in-suite but re-measures fast solo is
     interference, not a regression: the gate passes, the result dict

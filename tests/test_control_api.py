@@ -97,7 +97,7 @@ def test_stale_teardown_does_not_stop_replacement_consumer(stack, tmp_path):
 
     manager.stop_consumer("s", old)
     assert old.query.stopped  # the stale handle itself is released
-    assert old.hub.get_nowait() is None  # and its socket loop told to end
+    assert old.ended  # and its socket loop ends once the hub is drained
     assert not new.query.stopped  # the replacement keeps running
     assert manager._consumers["s"] is new
 
@@ -126,6 +126,41 @@ def test_stopped_consumers_leave_no_checkpoint_state(stack):
     manager.stop_all()
     root = manager.checkpoint_root
     assert not os.path.isdir(root) or os.listdir(root) == []
+
+
+def test_stop_does_not_wait_on_a_full_hub(stack, spark, monkeypatch):
+    """A stop never waits on the socket: a batch blocked on a full hub (its
+    client gone or slow) gives up once the stop begins, so query.stop()
+    returns and the query does not leak."""
+    import queue
+    import threading
+    import time
+
+    from squonk2_fastapi_ws_event_stream_spark.streaming import manager as manager_mod
+
+    monkeypatch.setattr(manager_mod, "CHUNK_ROWS", 1)
+    monkeypatch.setattr(manager_mod, "HUB_MAX_CHUNKS", 1)
+    _, _, manager, log_root = stack
+    w = EventLogWriter(log_root, "charges")
+    for i in range(5):
+        w.publish('{"a": %d}' % i, BASE_TS + i)
+    handle = manager.start_consumer("charges", starting_ordinal=0)
+    deadline = time.monotonic() + 60
+    while not handle.hub.full() and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert handle.hub.full()
+
+    stopper = threading.Thread(target=manager.stop_consumer, args=("charges",), daemon=True)
+    stopper.start()
+    stopper.join(timeout=20)
+    stuck = stopper.is_alive()
+    while stopper.is_alive():  # a stop that waits on the hub: drain it to end the test
+        try:
+            handle.hub.get(timeout=0.1)
+        except queue.Empty:
+            pass
+    assert not stuck, "stop_consumer waited on a full hub"
+    assert handle.query.id not in {q.id for q in spark.streams.active}
 
 
 def test_health_probe_runs_no_spark_job(stack, spark):

@@ -75,13 +75,16 @@ def test_ws_consume_with_ordinal_replay(ws_stack):
     c = WsClient(
         "127.0.0.1",
         server.port,
-        f"/event-stream/{rec['uuid']}?stream_from_ordinal=1&max_events=3&timeout_s=60",
+        f"/event-stream/{rec['uuid']}?stream_from_ordinal=1",
     )
-    msgs, close = [], None
-    while close is None:
+    msgs = []
+    for _ in range(3):
         text, close = c.recv_text_or_close()
-        if text is not None:
-            msgs.append(json.loads(text))
+        assert close is None
+        msgs.append(json.loads(text))
+    c.close()
+    while close is None:  # the server echoes the close after frames in flight
+        _, close = c.recv_text_or_close()
     c.shutdown()
     # exclusive seek from 1 → ordinals 2,3,4; ordinal n carries the n-th
     # published message (sqn = n-1, broker ts = BASE_TS + (n-1)*1000)
@@ -137,7 +140,7 @@ def test_ws_ping_pong(ws_stack):
     c = WsClient(
         "127.0.0.1",
         server.port,
-        f"/event-stream/{rec['uuid']}?max_events=1&timeout_s=60",
+        f"/event-stream/{rec['uuid']}",
     )
     c.ping(b"abc")
     pong = None
@@ -164,7 +167,7 @@ def test_ws_poison_terminates_with_close(ws_stack):
     c = WsClient(
         "127.0.0.1",
         server.port,
-        f"/event-stream/{rec['uuid']}?stream_from_ordinal=0&max_events=10&timeout_s=60",
+        f"/event-stream/{rec['uuid']}?stream_from_ordinal=0",
     )
     msgs, close = [], None
     while close is None:
@@ -208,6 +211,55 @@ def test_ws_failed_query_closes_1011(ws_stack):
     code, reason = close
     assert code == CLOSE_INTERNAL_ERROR
     assert reason and len(reason.encode("utf-8")) <= 123
+
+
+def test_ws_stopped_consumer_with_full_hub_closes_1000(tmp_path):
+    """One end rule, no Spark: a drained hub and an inactive query end the
+    session. A stop that found the hub full puts nothing on it, and the
+    socket still delivers what is queued and then closes normally."""
+    import queue
+    from types import SimpleNamespace
+
+    from squonk2_fastapi_ws_event_stream_spark.streaming.manager import ConsumerHandle
+
+    log_root = str(tmp_path / "log")
+    EventLogWriter(log_root, "charges").publish('{"a": 1}', BASE_TS)
+    hub = queue.Queue(maxsize=1)
+    hub.put(["queued"])
+    handle = ConsumerHandle(
+        stream="charges",
+        hub=hub,
+        checkpoint=str(tmp_path / "ckpt"),
+        query=SimpleNamespace(isActive=False, exception=lambda: None),
+        ended=True,
+    )
+    stopped = []
+
+    class FakeRegistry:
+        def get_by_uuid(self, es_uuid):
+            return {"routing_key": "charges"}
+
+    class FakeManager:
+        def __init__(self):
+            self.log_root = log_root
+
+        def start_consumer(self, stream, **_):
+            return handle
+
+        def stop_consumer(self, stream, h=None):
+            stopped.append(h)
+
+    server = EventStreamWsServer(FakeRegistry(), FakeManager()).start_background()
+    try:
+        c = WsClient("127.0.0.1", server.port, "/event-stream/u", timeout=5)
+        try:
+            assert c.recv_text_or_close() == ("queued", None)
+            assert c.recv_text_or_close() == (None, (CLOSE_NORMAL, ""))
+        finally:
+            c.shutdown()
+    finally:
+        server.stop()
+    assert stopped == [handle]
 
 
 def test_ws_close_reason_is_cut_to_rfc_limit(ws_stack):
@@ -266,6 +318,24 @@ def test_es_client_prints_messages_and_byte_stats(ws_stack, capsys):
     }
 
 
+def test_es_client_idle_timeout_is_client_side(ws_stack, capsys):
+    """--timeout is the client's idle limit: when no frame arrives in time
+    the client closes, and the server answers with close 1000."""
+    import es_client
+
+    server, registry, manager, log_root = ws_stack
+    EventLogWriter(log_root, "charges").publish(
+        '{"message_type": "t", "message_body": {}}', BASE_TS
+    )
+    rec = registry.create("charges")
+    es_client.main(
+        [f"ws://127.0.0.1:{server.port}", rec["uuid"], "-o", "0", "--timeout", "15"]
+    )
+    out, err = capsys.readouterr()
+    assert out.splitlines() == [f"[1] {BASE_TS} t {{}}"]
+    assert err.strip().splitlines()[-2] == "closed: (1000, '')"
+
+
 def test_ws_client_close_releases_consumer(ws_stack):
     server, registry, manager, log_root = ws_stack
     EventLogWriter(log_root, "charges").publish(
@@ -275,7 +345,7 @@ def test_ws_client_close_releases_consumer(ws_stack):
     c = WsClient(
         "127.0.0.1",
         server.port,
-        f"/event-stream/{rec['uuid']}?stream_from_ordinal=0&timeout_s=60",
+        f"/event-stream/{rec['uuid']}?stream_from_ordinal=0",
     )
     # receive the first message, then close client-side
     text, _ = c.recv_text_or_close()
@@ -308,7 +378,7 @@ def test_second_ws_consumer_replaces_first(ws_stack):
     stream, newest connection wins (memcached knock-out,
     app/app.py:320-344,451-462). Spark-native form: start_consumer
     replaces the StreamingQuery, and the first socket's delivery loop ends
-    with a normal close once its consumer's hub is sentinel-terminated."""
+    with a normal close once its stopped query's hub is drained."""
     import threading
     import time
 
@@ -326,7 +396,7 @@ def test_second_ws_consumer_replaces_first(ws_stack):
         c = WsClient(
             "127.0.0.1",
             server.port,
-            f"/event-stream/{rec['uuid']}?stream_from_ordinal=0&timeout_s=120",
+            f"/event-stream/{rec['uuid']}?stream_from_ordinal=0",
             timeout=120,
         )
         close = None
@@ -351,12 +421,15 @@ def test_second_ws_consumer_replaces_first(ws_stack):
     c2 = WsClient(
         "127.0.0.1",
         server.port,
-        f"/event-stream/{rec['uuid']}?stream_from_ordinal=2&max_events=1&timeout_s=60",
+        f"/event-stream/{rec['uuid']}?stream_from_ordinal=2",
     )
     text2, close2 = c2.recv_text_or_close()
     assert text2 is not None and json.loads(text2)["ess_ordinal"] == 3
     c2.close()
+    while close2 is None:
+        _, close2 = c2.recv_text_or_close()
     c2.shutdown()
+    assert close2[0] == CLOSE_NORMAL
 
     t1.join(timeout=60)
     assert not t1.is_alive(), "first client should have been released"
@@ -398,12 +471,6 @@ def test_consume_params_field_messages_and_precedence():
     # valid datetime passes through unparsed (the source option parses it)
     p = ConsumeParams.from_query("stream_from_datetime=2024-01-01T00:00:00%2B00:00")
     assert p.error is None and p.starting_datetime == "2024-01-01T00:00:00+00:00"
-
-
-def test_consume_params_default_is_no_idle_timeout():
-    from squonk2_fastapi_ws_event_stream_spark.streaming.websocket import ConsumeParams
-
-    # reference parity: a quiet stream's consumer stays connected until
-    # POISON or client close; finite timeout_s is opt-in for tests/drains
-    assert ConsumeParams.from_query("").timeout_s is None
-    assert ConsumeParams.from_query("timeout_s=5").timeout_s == 5.0
+    # params other than stream_from_* are ignored, as in the reference
+    p = ConsumeParams.from_query("stream_from_ordinal=4&max_events=3&timeout_s=5")
+    assert p.error is None and p.starting_ordinal == 4
