@@ -5,7 +5,10 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 if [[ "${1:-}" == "--quick" ]]; then
-    python -m pytest tests/ -x -q
+    # The tier-1 command (ROADMAP.md): no -x, so a known batch-surface
+    # failure does not hide the relay tests behind it.
+    export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local
+    python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
     exit 0
 fi
 

@@ -76,8 +76,12 @@ AMS_P = P
 # 168 ms, shingle_hashes 115 ms, simhash 870-1780 ms — re-paid on every
 # bench run by ~27 queries); the parsed trees lower to the identical
 # long arithmetic, so every output is bit-identical.  Inputs are SQL
-# fragments (column names or expressions), matching the sql_* oracle
-# twins' calling convention.
+# fragments, matching the sql_* oracle twins' calling convention.
+# Callers pass a cheap column reference, not an expression: each
+# fragment is interpolated unparenthesized and repeated (char_codes
+# twice, shingle_hashes K times), so an expression would be evaluated
+# once per repetition per element, and a malformed fragment fails only
+# when the whole string is parsed.
 
 
 def char_codes(text_sql: str) -> Column:

@@ -3830,6 +3830,11 @@ def e50_token_bucket_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # because Column-API lambdas cannot spell `div`; a full SQL string
     # can).  element_at(log, i) is the 0-based-transform's PREVIOUS
     # element because SQL array indexing is 1-based.
+    # Precondition: event times satisfy us >= 0 (on or after the epoch).
+    # The oracle gates refill on its l >= 0 sentinel, so across a
+    # negative-us prefix it refills nothing and measures the first
+    # post-epoch gap from -1; this form refills every gap, and the two
+    # agree only when no event time is negative.
     refills = F.expr(
         f"""transform(log, (x, i) -> CASE WHEN i = 0 THEN CAST(0 AS BIGINT)
             ELSE (x.us - element_at(log, i).us) * {E50_RATE_MILLI}

@@ -239,44 +239,46 @@ def _last_offset(root: str, stream: str) -> int:
     return max(last, _read_hwm(root, stream))
 
 
-def _opt(options: dict, name: str):
-    """Option lookup tolerant of Spark's lowercased option keys."""
-    if name in options:
-        return options[name]
-    return options.get(name.lower())
-
-
 SEEK_OPTIONS = ("startingOrdinal", "startingTimestampMs", "startingDatetime")
 
 
-def _seek_start(root: str, stream: str, options: dict) -> int:
-    """Resolve the replay options to an exclusive start offset.
-
-    Mirrors app/app.py:222-278: at most one stream_from_* param; ordinal
-    seeks are exclusive; timestamp/datetime seeks deliver events with
-    broker timestamp strictly greater; default is LATEST (OffsetType.NEXT,
-    app/app.py:226-228).
+def seek_position(options) -> tuple[str, int | None]:
+    """The seek rules, checked once (app/app.py:222-278): at most one
+    ``stream_from_*`` option; the default is LATEST (OffsetType.NEXT,
+    app/app.py:226-228). Returns ``("latest", None)``, ``("ordinal", n)``
+    or ``("timestamp", ms)``. ``options`` is Spark's case-insensitive map
+    or any mapping keyed by the option names above.
     """
-    given = [k for k in SEEK_OPTIONS if _opt(options, k) is not None]
+    given = [k for k in SEEK_OPTIONS if options.get(k) is not None]
     if len(given) > 1:
         # WS close 1002 analog (app/app.py:269-278)
         raise ValueError(
             "Cannot provide more than one 'stream_from_' variable: " + ", ".join(given)
         )
     if not given:
-        return _last_offset(root, stream)
+        return ("latest", None)
     if given[0] == "startingOrdinal":
-        return int(_opt(options, "startingOrdinal"))
+        return ("ordinal", int(options.get("startingOrdinal")))
     if given[0] == "startingTimestampMs":
-        cutoff_ms = int(_opt(options, "startingTimestampMs"))
-    else:
-        dt = datetime.fromisoformat(str(_opt(options, "startingDatetime")))
-        if dt.tzinfo is None:
-            # tz-less strings are UTC (README.md:211-215; fixes the
-            # process-local-tz bug at app/app.py:238)
-            dt = dt.replace(tzinfo=timezone.utc)
-        cutoff_ms = int(dt.timestamp() * 1000)
-    # Find the last offset at-or-before the cutoff → exclusive start.
+        return ("timestamp", int(options.get("startingTimestampMs")))
+    dt = datetime.fromisoformat(str(options.get("startingDatetime")))
+    if dt.tzinfo is None:
+        # tz-less strings are UTC (README.md:211-215; fixes the
+        # process-local-tz bug at app/app.py:238)
+        dt = dt.replace(tzinfo=timezone.utc)
+    return ("timestamp", int(dt.timestamp() * 1000))
+
+
+def _seek_start(root: str, stream: str, options) -> int:
+    """Resolve the replay options to an exclusive start offset: ordinal
+    seeks are exclusive; timestamp/datetime seeks deliver events with
+    broker timestamp strictly greater."""
+    kind, value = seek_position(options)
+    if kind == "latest":
+        return _last_offset(root, stream)
+    if kind == "ordinal":
+        return value
+    # Find the last offset at-or-before the cutoff (ms) → exclusive start.
     start = 0
     path = os.path.join(stream_dir(root, stream), LOG_FILE)
     if os.path.exists(path):
@@ -285,7 +287,7 @@ def _seek_start(root: str, stream: str, options: dict) -> int:
                 if not line.strip():
                     continue
                 rec = json.loads(line)
-                if rec["timestamp"] <= cutoff_ms:
+                if rec["timestamp"] <= value:
                     start = rec["offset"]
                 else:
                     break
@@ -303,7 +305,7 @@ class StreamSlice(InputPartition):
 
 
 class EventStreamBatchReader(DataSourceReader):
-    def __init__(self, options: dict):
+    def __init__(self, options):
         self.root = options["path"]
         self.options = options
 
@@ -313,13 +315,11 @@ class EventStreamBatchReader(DataSourceReader):
             if self.options.get("stream")
             else list_streams(self.root)
         )
+        full_scan = seek_position(self.options)[0] == "latest"
         out = []
         for s in streams:
-            start = (
-                _seek_start(self.root, s, self.options)
-                if any(_opt(self.options, k) is not None for k in SEEK_OPTIONS)
-                else 0  # batch default: full scan (ordinals are 1-based)
-            )
+            # batch default: full scan (ordinals are 1-based)
+            start = 0 if full_scan else _seek_start(self.root, s, self.options)
             out.append(StreamSlice(s, start, _last_offset(self.root, s)))
         return out
 
@@ -334,7 +334,7 @@ class EventStreamBatchReader(DataSourceReader):
 class EventStreamStreamReader(DataSourceStreamReader):
     """Micro-batch reader over one stream (single partition → total order)."""
 
-    def __init__(self, options: dict):
+    def __init__(self, options):
         self.root = options["path"]
         self.stream = options.get("stream")
         if not self.stream:
@@ -348,7 +348,7 @@ class EventStreamStreamReader(DataSourceStreamReader):
         # target, so a capped availableNow run drains at most one cap of
         # messages per run; a recurring trigger drains the backlog one cap
         # per trigger. See latestOffset() for the restart contract.
-        self.max_per_batch = int(_opt(options, "maxOffsetsPerTrigger") or 0) or None
+        self.max_per_batch = int(options.get("maxOffsetsPerTrigger") or 0) or None
         self._cursor: int | None = None  # last planned end offset
 
     def initialOffset(self) -> dict:
@@ -411,10 +411,10 @@ class EventStreamDataSource(DataSource):
         return ENVELOPE
 
     def reader(self, schema: StructType) -> DataSourceReader:
-        return EventStreamBatchReader(dict(self.options))
+        return EventStreamBatchReader(self.options)
 
     def streamReader(self, schema: StructType) -> DataSourceStreamReader:
-        return EventStreamStreamReader(dict(self.options))
+        return EventStreamStreamReader(self.options)
 
 
 def enforce_retention(

@@ -9,8 +9,9 @@ production seam: the SAME option surface (`stream`, `startingOrdinal`,
 datetime parsing) mapped onto broker offset specs, with connection options
 (`host`, `port`, `vhost`, `username`, `password`) replacing `path`.
 
-`offset_spec(options)` is the pure, unit-tested mapping — identical seek
-semantics to `eventstream._seek_start`, returning the broker-level spec:
+`offset_spec(options)` is the pure, unit-tested mapping of
+`eventstream.seek_position` (the one copy of the seek rules) to the
+broker-level spec:
 
     ("next", None)            default — only new events (OffsetType.NEXT)
     ("offset", n)             EXCLUSIVE ordinal n → broker offset n (the
@@ -27,53 +28,32 @@ at import time, so registering the source is always safe.
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
-
 try:  # pragma: no cover - exercised only where pyspark DS API is present
     from pyspark.sql.datasource import DataSource, DataSourceStreamReader
 except ImportError:  # pragma: no cover
     DataSource = object  # type: ignore[assignment,misc]
     DataSourceStreamReader = object  # type: ignore[assignment,misc]
 
-from .eventstream import ENVELOPE, SEEK_OPTIONS, _opt
+from .eventstream import ENVELOPE, seek_position
 
-CONNECTION_OPTIONS = ("host", "port", "vhost", "username", "password")
-
-
-def offset_spec(options: dict) -> tuple[str, int | None]:
-    """Resolve seek options to a broker offset specification.
-
-    Same contract as the file source (mutual exclusion → ValueError with
-    the reference's wire message; tz-less datetimes are UTC).
-    """
-    given = [k for k in SEEK_OPTIONS if _opt(options, k) is not None]
-    if len(given) > 1:
-        raise ValueError(
-            "Cannot provide more than one 'stream_from_' variable: " + ", ".join(given)
-        )
-    if not given:
-        return ("next", None)
-    if given[0] == "startingOrdinal":
-        return ("offset", int(_opt(options, "startingOrdinal")))
-    if given[0] == "startingTimestampMs":
-        return ("timestamp", int(_opt(options, "startingTimestampMs")))
-    dt = datetime.fromisoformat(str(_opt(options, "startingDatetime")))
-    if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=timezone.utc)
-    return ("timestamp", int(dt.timestamp() * 1000))
+def offset_spec(options) -> tuple[str, int | None]:
+    """Map ``eventstream.seek_position`` (the file source's seek rules) to
+    a broker offset specification."""
+    kind, value = seek_position(options)
+    return {"latest": "next", "ordinal": "offset", "timestamp": "timestamp"}[kind], value
 
 
-def connection_params(options: dict) -> dict:
+def connection_params(options) -> dict:
     """Extract + default the broker connection parameters."""
-    if not _opt(options, "stream"):
+    if not options.get("stream"):
         raise ValueError("rabbitmq-eventstream requires a 'stream' option")
     return {
-        "host": _opt(options, "host") or "localhost",
-        "port": int(_opt(options, "port") or 5552),
-        "vhost": _opt(options, "vhost") or "/",
-        "username": _opt(options, "username") or "guest",
-        "password": _opt(options, "password") or "guest",
-        "stream": _opt(options, "stream"),
+        "host": options.get("host") or "localhost",
+        "port": int(options.get("port") or 5552),
+        "vhost": options.get("vhost") or "/",
+        "username": options.get("username") or "guest",
+        "password": options.get("password") or "guest",
+        "stream": options.get("stream"),
     }
 
 

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import base64
 import hashlib
+import http.server
 import queue
 import socket
 import socketserver
@@ -179,12 +180,17 @@ class ConsumeParams:
         return p
 
 
-class _WsHandler(socketserver.StreamRequestHandler):
+class _WsHandler(http.server.BaseHTTPRequestHandler):
     """One thread per WebSocket connection (the reference runs one asyncio
     task per socket; per-connection threads are the WSGI-world equivalent —
-    connection counts here are per-stream-singleton, not C10K)."""
+    connection counts here are per-stream-singleton, not C10K).
+
+    The stdlib parses the request and answers what is not a WebSocket
+    upgrade: 501 for a non-GET method, 414 for an over-long request line,
+    431 for too many or too long headers."""
 
     server: "EventStreamWsServer"
+    protocol_version = "HTTP/1.1"
 
     def setup(self) -> None:
         super().setup()
@@ -194,69 +200,36 @@ class _WsHandler(socketserver.StreamRequestHandler):
         # corrupting the WS stream.
         self._wlock = threading.Lock()
 
-    def handle(self) -> None:  # noqa: C901 — linear protocol walk
+    def log_message(self, format: str, *args) -> None:
+        pass  # no access log
+
+    def handle(self) -> None:
         try:
-            request_line = self.rfile.readline(8192).decode("latin-1").strip()
-            if not request_line:
-                return
-            parts = request_line.split()
-            if len(parts) != 3 or parts[0] != "GET":
-                self._http_error(400, "Bad Request")
-                return
-            target = parts[1]
-            headers: dict[str, str] = {}
-            while True:
-                line = self.rfile.readline(8192).decode("latin-1")
-                if line in ("\r\n", "\n", ""):
-                    break
-                k, _, v = line.partition(":")
-                headers[k.strip().lower()] = v.strip()
-
-            if (
-                "websocket" not in headers.get("upgrade", "").lower()
-                or "sec-websocket-key" not in headers
-            ):
-                self._http_error(426, "Upgrade Required")
-                return
-
-            url = urllib.parse.urlparse(target)
-            path_parts = [p for p in url.path.split("/") if p]
-            # Path shape: /event-stream/{uuid}
-            if len(path_parts) != 2 or path_parts[0] != "event-stream":
-                self._http_error(404, "Not Found")
-                return
-            es_uuid = path_parts[1]
-
-            # Complete the upgrade BEFORE semantic validation — the
-            # reference accepts first (app/app.py:212) then closes with a
-            # mapped code, and clients depend on seeing the close frame.
-            self._send_101(headers["sec-websocket-key"])
-            self._consume(es_uuid, url.query)
-        except (ConnectionError, OSError):
+            super().handle()
+        except OSError:
             pass  # client went away — at-most-once delivery tolerates this
 
-    # -- handshake/HTTP plumbing ------------------------------------------
-    def _send_101(self, client_key: str) -> None:
-        resp = (
-            "HTTP/1.1 101 Switching Protocols\r\n"
-            "Upgrade: websocket\r\n"
-            "Connection: Upgrade\r\n"
-            f"Sec-WebSocket-Accept: {accept_key(client_key)}\r\n"
-            "\r\n"
-        )
-        self.wfile.write(resp.encode("latin-1"))
-
-    def _http_error(self, code: int, text: str) -> None:
-        body = text.encode("utf-8")
-        self.wfile.write(
-            (
-                f"HTTP/1.1 {code} {text}\r\n"
-                "Content-Type: text/plain\r\n"
-                f"Content-Length: {len(body)}\r\n"
-                "Connection: close\r\n\r\n"
-            ).encode("latin-1")
-            + body
-        )
+    def do_GET(self) -> None:
+        key = self.headers.get("Sec-WebSocket-Key")
+        if "websocket" not in self.headers.get("Upgrade", "").lower() or key is None:
+            self.send_error(426)
+            return
+        url = urllib.parse.urlparse(self.path)
+        path_parts = [p for p in url.path.split("/") if p]
+        # Path shape: /event-stream/{uuid}
+        if len(path_parts) != 2 or path_parts[0] != "event-stream":
+            self.send_error(404)
+            return
+        # Complete the upgrade BEFORE semantic validation — the reference
+        # accepts first (app/app.py:212) then closes with a mapped code,
+        # and clients depend on seeing the close frame.
+        self.send_response(101)
+        self.send_header("Upgrade", "websocket")
+        self.send_header("Connection", "Upgrade")
+        self.send_header("Sec-WebSocket-Accept", accept_key(key))
+        self.end_headers()
+        self.close_connection = True
+        self._consume(path_parts[1], url.query)
 
     def _close(self, code: int, reason: str = "") -> None:
         try:

@@ -50,7 +50,11 @@ def test_mutual_exclusion_uses_reference_message():
 
 
 def test_lowercased_spark_option_keys_accepted():
-    assert offset_spec({"startingordinal": "7"}) == ("offset", 7)
+    # Spark hands a data source its options as a CaseInsensitiveDict
+    # whose keys are lowercased.
+    from pyspark.sql.datasource import CaseInsensitiveDict
+
+    assert offset_spec(CaseInsensitiveDict({"startingordinal": "7"})) == ("offset", 7)
 
 
 def test_connection_defaults():

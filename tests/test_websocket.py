@@ -362,15 +362,40 @@ def test_ws_client_close_releases_consumer(ws_stack):
     assert not manager.snapshot()
 
 
-def test_non_ws_request_gets_http_error(ws_stack):
+def _http_status(port: int, request: bytes) -> str:
+    """Send a raw request; return the response's status line."""
     import socket
 
+    with socket.create_connection(("127.0.0.1", port), timeout=10) as s:
+        s.sendall(request)
+        with s.makefile("rb") as f:
+            return f.readline().decode("latin-1").strip()
+
+
+def test_non_ws_request_gets_http_error(ws_stack):
     server, *_ = ws_stack
-    s = socket.create_connection(("127.0.0.1", server.port), timeout=10)
-    s.sendall(b"GET /event-stream/x HTTP/1.1\r\nHost: h\r\n\r\n")
-    resp = s.recv(4096).decode("latin-1")
-    s.close()
-    assert resp.startswith("HTTP/1.1 426")
+    upgrade = (
+        b"Upgrade: websocket\r\nConnection: Upgrade\r\n"
+        b"Sec-WebSocket-Key: MDEyMzQ1Njc4OWFiY2RlZg==\r\nSec-WebSocket-Version: 13\r\n"
+    )
+    for request, status in (
+        (b"GET /event-stream/x HTTP/1.1\r\nHost: h\r\n\r\n", "HTTP/1.1 426"),
+        (b"GET /elsewhere/x HTTP/1.1\r\nHost: h\r\n" + upgrade + b"\r\n", "HTTP/1.1 404"),
+    ):
+        assert _http_status(server.port, request).startswith(status), request
+
+
+def test_header_flood_is_refused_431():
+    """The handshake reads a bounded request head: a GET with thousands of
+    headers is refused with 431 once the stdlib's 100-header cap is hit.
+    No Spark: the refusal happens before the registry or manager is used."""
+    server = EventStreamWsServer(registry=None, manager=None).start_background()
+    try:
+        headers = b"".join(b"X-H%d: v\r\n" % i for i in range(5000))
+        request = b"GET /event-stream/x HTTP/1.1\r\nHost: h\r\n" + headers + b"\r\n"
+        assert _http_status(server.port, request).startswith("HTTP/1.1 431")
+    finally:
+        server.stop()
 
 
 def test_second_ws_consumer_replaces_first(ws_stack):
