@@ -177,7 +177,9 @@ def _read_log(root: str, stream: str, start_exclusive: int, end_inclusive: int |
     import pyarrow.json as pajson
 
     path = os.path.join(stream_dir(root, stream), LOG_FILE)
-    if not os.path.exists(path):
+    # Retention that expires every record leaves a 0-byte log, which
+    # pyarrow refuses to parse ("Empty JSON file"): it holds no rows.
+    if not os.path.exists(path) or os.path.getsize(path) == 0:
         return
 
     # C++-side JSONL parse (~10× a Python json.loads loop), then a
@@ -239,29 +241,38 @@ def _last_offset(root: str, stream: str) -> int:
     return max(last, _read_hwm(root, stream))
 
 
-SEEK_OPTIONS = ("startingOrdinal", "startingTimestampMs", "startingDatetime")
+# Each seek option, in the reference's check order, with its message for a
+# value that does not parse (app/app.py:230-266).
+SEEK_OPTIONS = {
+    "startingOrdinal": "stream_from_ordinal must be an integer",
+    "startingTimestampMs": "stream_from_timestamp must be an integer",
+    "startingDatetime": "Unable to parse stream_from_datetime value",
+}
 
 
 def seek_position(options) -> tuple[str, int | None]:
-    """The seek rules, checked once (app/app.py:222-278): at most one
+    """The one parser of a seek (app/app.py:222-278): at most one
     ``stream_from_*`` option; the default is LATEST (OffsetType.NEXT,
     app/app.py:226-228). Returns ``("latest", None)``, ``("ordinal", n)``
     or ``("timestamp", ms)``. ``options`` is Spark's case-insensitive map
-    or any mapping keyed by the option names above.
+    or any mapping keyed by the option names above. A bad seek raises
+    ValueError with the reference's exact message; mutual exclusion is
+    checked first, so it wins over a bad value (app/app.py:269-273).
     """
     given = [k for k in SEEK_OPTIONS if options.get(k) is not None]
     if len(given) > 1:
-        # WS close 1002 analog (app/app.py:269-278)
-        raise ValueError(
-            "Cannot provide more than one 'stream_from_' variable: " + ", ".join(given)
-        )
+        raise ValueError("Cannot provide more than one 'stream_from_' variable")
     if not given:
         return ("latest", None)
-    if given[0] == "startingOrdinal":
-        return ("ordinal", int(options.get("startingOrdinal")))
-    if given[0] == "startingTimestampMs":
-        return ("timestamp", int(options.get("startingTimestampMs")))
-    dt = datetime.fromisoformat(str(options.get("startingDatetime")))
+    raw = options.get(given[0])
+    try:
+        if given[0] == "startingOrdinal":
+            return ("ordinal", int(raw))
+        if given[0] == "startingTimestampMs":
+            return ("timestamp", int(raw))
+        dt = datetime.fromisoformat(str(raw))
+    except ValueError:
+        raise ValueError(SEEK_OPTIONS[given[0]]) from None
     if dt.tzinfo is None:
         # tz-less strings are UTC (README.md:211-215; fixes the
         # process-local-tz bug at app/app.py:238)

@@ -21,6 +21,8 @@ only manages StreamingQuery handles — it is control plane, not data plane.
 
 from __future__ import annotations
 
+import os
+
 from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
 
@@ -68,10 +70,18 @@ def create_app(
 
     @app.post("/event-stream/")
     def post_es():  # C2
-        body = request.get_json(silent=True) or {}
-        routing_key = body.get("routing_key")
+        body = request.get_json(silent=True)
+        routing_key = body.get("routing_key") if isinstance(body, dict) else None
         if not routing_key:
             return jsonify({"detail": "routing_key is required"}), 422
+        # A routing key names one directory under the log root
+        # (eventstream.stream_dir), so it must be one path component.
+        if (
+            not isinstance(routing_key, str)
+            or os.path.basename(routing_key) != routing_key
+            or routing_key in (".", "..")
+        ):
+            return jsonify({"detail": "routing_key must be one path component"}), 422
         rec = registry.create(routing_key)
         return (
             jsonify({"id": rec["id"], "location": _location(request.host_url, rec["uuid"])}),

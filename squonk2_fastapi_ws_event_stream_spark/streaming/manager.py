@@ -62,14 +62,10 @@ class StreamManager:
         self._lock = threading.Lock()
         spark.dataSource.register(EventStreamDataSource)
 
-    def start_consumer(
-        self,
-        stream: str,
-        starting_ordinal: int | None = None,
-        starting_timestamp_ms: int | None = None,
-        starting_datetime: str | None = None,
-    ) -> ConsumerHandle:
-        """Start (or replace) the single consumer for a stream."""
+    def start_consumer(self, stream: str, seek: dict | None = None) -> ConsumerHandle:
+        """Start (or replace) the single consumer for a stream. ``seek``
+        maps seek option names to raw values; the source parses them
+        (`eventstream.seek_position`)."""
         self.stop_consumer(stream)
 
         handle = ConsumerHandle(
@@ -78,15 +74,9 @@ class StreamManager:
             checkpoint=f"{self.checkpoint_root}/{stream}-{uuid.uuid4().hex}",
         )
 
-        reader = self.spark.readStream.format("eventstream").option(
-            "path", self.log_root
-        ).option("stream", stream)
-        if starting_ordinal is not None:
-            reader = reader.option("startingOrdinal", starting_ordinal)
-        if starting_timestamp_ms is not None:
-            reader = reader.option("startingTimestampMs", starting_timestamp_ms)
-        if starting_datetime is not None:
-            reader = reader.option("startingDatetime", starting_datetime)
+        reader = self.spark.readStream.format("eventstream").options(
+            path=self.log_root, stream=stream, **(seek or {})
+        )
 
         # The whole relay transform (decode, filters, enrichment, poison
         # detection) runs JVM-side inside the streaming query; foreachBatch

@@ -6,7 +6,7 @@ This is the reference's defining interface: a client connects to
 message from the backing stream (/root/reference/app/app.py:193-373; the
 send site is ``websocket.send_text`` at :496-508). Close-code parity:
 
-    1002  >1 ``stream_from_`` param      (app/app.py:269-278)
+    1002  bad or >1 ``stream_from_`` param (app/app.py:230-278)
     1000  unknown EventStream uuid       (app/app.py:287-291)
     1013  backing stream does not exist  (app/app.py:314-318)
     1000  normal end (POISON / server stop / client close)
@@ -38,10 +38,8 @@ import socketserver
 import struct
 import threading
 import urllib.parse
-from dataclasses import dataclass
-from datetime import datetime
 
-from ..sources.eventstream import stream_exists
+from ..sources.eventstream import seek_position, stream_exists
 
 WS_GUID = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"
 
@@ -55,6 +53,17 @@ CLOSE_TRY_AGAIN_LATER = 1013
 # A close frame is a control frame: at most 125 payload bytes, two of them
 # the code (RFC 6455 §5.5).
 MAX_CLOSE_REASON_BYTES = 123
+
+# The C5 query params and the source options they pass to, unparsed: the
+# source's `seek_position` is their one parser. Any other param is ignored
+# (app/app.py:222-278). There is no server-side count or idle timeout: a
+# quiet stream stays open until POISON, a server stop or a client close
+# (app/app.py:496-508). Clients set their own limits (es_client.py).
+SEEK_PARAMS = {
+    "stream_from_ordinal": "startingOrdinal",
+    "stream_from_timestamp": "startingTimestampMs",
+    "stream_from_datetime": "startingDatetime",
+}
 
 
 def accept_key(client_key: str) -> str:
@@ -125,61 +134,6 @@ def parse_close(payload: bytes) -> tuple[int | None, str]:
     return None, ""
 
 
-@dataclass
-class ConsumeParams:
-    """The C5 query params, validated as the reference validates them.
-
-    Only the three ``stream_from_*`` params are read; any other is ignored
-    (app/app.py:222-278). There is no server-side count or idle timeout: a
-    quiet stream stays open until POISON, a server stop or a client close
-    (app/app.py:496-508). Clients set their own limits (es_client.py).
-    """
-
-    starting_ordinal: int | None = None
-    starting_timestamp_ms: int | None = None
-    starting_datetime: str | None = None
-    error: str | None = None
-
-    @classmethod
-    def from_query(cls, query: str) -> "ConsumeParams":
-        q = urllib.parse.parse_qs(query)
-
-        def one(name: str) -> str | None:
-            vals = q.get(name)
-            return vals[0] if vals else None
-
-        p = cls()
-        n_given = 0
-        # Per-field validation mirrors app/app.py:230-266 — each bad value
-        # sets the reference's exact message; the mutual-exclusion error
-        # then REPLACES any per-field error (app/app.py:269-273), so the
-        # precedence matches too.
-        if one("stream_from_datetime") is not None:
-            n_given += 1
-            raw = one("stream_from_datetime")
-            try:
-                datetime.fromisoformat(raw)  # the engine's parser (Q4 seam)
-                p.starting_datetime = raw
-            except ValueError:
-                p.error = "Unable to parse stream_from_datetime value"
-        if one("stream_from_ordinal") is not None:
-            n_given += 1
-            try:
-                p.starting_ordinal = int(one("stream_from_ordinal"))
-            except ValueError:
-                p.error = "stream_from_ordinal must be an integer"
-        if one("stream_from_timestamp") is not None:
-            n_given += 1
-            try:
-                p.starting_timestamp_ms = int(one("stream_from_timestamp"))
-            except ValueError:
-                p.error = "stream_from_timestamp must be an integer"
-        if n_given > 1:
-            # app/app.py:269-278 — exact reference message
-            p.error = "Cannot provide more than one 'stream_from_' variable"
-        return p
-
-
 class _WsHandler(http.server.BaseHTTPRequestHandler):
     """One thread per WebSocket connection (the reference runs one asyncio
     task per socket; per-connection threads are the WSGI-world equivalent —
@@ -231,31 +185,27 @@ class _WsHandler(http.server.BaseHTTPRequestHandler):
         self.close_connection = True
         self._consume(path_parts[1], url.query)
 
-    def _close(self, code: int, reason: str = "") -> None:
-        try:
-            with self._wlock:
-                self.wfile.write(encode_frame(OP_CLOSE, close_payload(code, reason)))
-                self.wfile.flush()
-        except OSError:
-            pass
-
-    def _send_text_many(self, texts: list[str]) -> None:
-        """Bulk delivery: encode every frame, then ONE write + flush under
-        one lock acquisition — the per-frame write/flush was the other
-        half of the per-connection delivery ceiling (round-6 task #6).
-        Frames stay individual RFC 6455 text frames; only the syscalls
-        are batched."""
-        buf = b"".join(encode_frame(OP_TEXT, t.encode("utf-8")) for t in texts)
+    def _send(self, buf: bytes) -> None:
+        """The one socket write path: one write + flush under the lock."""
         with self._wlock:
             self.wfile.write(buf)
             self.wfile.flush()
 
+    def _close(self, code: int, reason: str = "") -> None:
+        try:
+            self._send(encode_frame(OP_CLOSE, close_payload(code, reason)))
+        except OSError:
+            pass
+
     # -- the consume path (C5) --------------------------------------------
     def _consume(self, es_uuid: str, query: str) -> None:
         server = self.server
-        params = ConsumeParams.from_query(query)
-        if params.error:
-            self._close(CLOSE_PROTOCOL_ERROR, params.error)
+        q = urllib.parse.parse_qs(query)
+        seek = {opt: q[param][0] for param, opt in SEEK_PARAMS.items() if param in q}
+        try:
+            seek_position(seek)
+        except ValueError as exc:
+            self._close(CLOSE_PROTOCOL_ERROR, str(exc))
             return
         rec = server.registry.get_by_uuid(es_uuid)
         if rec is None:
@@ -267,12 +217,7 @@ class _WsHandler(http.server.BaseHTTPRequestHandler):
             self._close(CLOSE_TRY_AGAIN_LATER, f"EventStream {es_uuid} cannot be found")
             return
 
-        handle = server.manager.start_consumer(
-            rec["routing_key"],
-            starting_ordinal=params.starting_ordinal,
-            starting_timestamp_ms=params.starting_timestamp_ms,
-            starting_datetime=params.starting_datetime,
-        )
+        handle = server.manager.start_consumer(rec["routing_key"], seek=seek)
 
         # Watch for client frames (close / ping) without blocking delivery.
         client_closed = threading.Event()
@@ -285,9 +230,7 @@ class _WsHandler(http.server.BaseHTTPRequestHandler):
                         client_closed.set()
                         return
                     if opcode == OP_PING:
-                        with self._wlock:
-                            self.wfile.write(encode_frame(OP_PONG, payload))
-                            self.wfile.flush()
+                        self._send(encode_frame(OP_PONG, payload))
             except (ConnectionError, OSError):
                 client_closed.set()
 
@@ -312,7 +255,8 @@ class _WsHandler(http.server.BaseHTTPRequestHandler):
                     break
                 if chunk is None:  # the POISON pill
                     break
-                self._send_text_many(chunk)  # one micro-batch slice, one write
+                # one micro-batch slice, one write
+                self._send(b"".join(encode_frame(OP_TEXT, t.encode()) for t in chunk))
             self._close(code, reason)
         except (ConnectionError, OSError):
             pass  # WebSocketDisconnect analog (app/app.py:503-508): drop

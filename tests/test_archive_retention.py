@@ -115,6 +115,30 @@ def test_retention_never_reuses_ordinals(spark, tmp_path):
     assert w.publish("fresh", BASE_TS + 10_000_000) == 6  # NOT 1
 
 
+def test_stream_emptied_by_retention_reads_as_no_rows(spark, tmp_path):
+    """Expiring every record leaves a 0-byte log: reads of it return no
+    rows instead of failing, and a replay from 0 then sees only what was
+    published after."""
+    root = str(tmp_path / "log")
+    w = EventLogWriter(root, "s")
+    for i in range(5):
+        w.publish("m%d" % i, BASE_TS + i * 1000)
+    assert enforce_retention(root, "s", max_age_ms=1, now_ms=BASE_TS + 10_000_000) == 5
+    spark.dataSource.register(EventStreamDataSource)
+
+    def read(**seek):
+        return (
+            spark.read.format("eventstream")
+            .options(path=root, stream="s", **seek)
+            .load()
+        )
+
+    assert read().count() == 0
+    assert read(startingOrdinal=0).count() == 0
+    w.publish("fresh", BASE_TS + 10_000_000)
+    assert [r["offset"] for r in read(startingOrdinal=0).collect()] == [6]
+
+
 def test_health_endpoint(spark, tmp_path):
     from squonk2_fastapi_ws_event_stream_spark.sources.registry import Registry
     from squonk2_fastapi_ws_event_stream_spark.streaming.api import create_app

@@ -60,6 +60,17 @@ def test_create_requires_routing_key(stack):
     assert client.post("/event-stream/", json={}).status_code == 422
 
 
+def test_create_refuses_a_routing_key_that_is_not_one_path_component(stack):
+    # A routing key names a directory under the log root: a traversal, a
+    # nested path or a non-string must not reach the registry.
+    client, registry, *_ = stack
+    for key in ("../victim", "a/b", 5, ["x"]):
+        r = client.post("/event-stream/", json={"routing_key": key})
+        assert r.status_code == 422, key
+    assert client.post("/event-stream/", json=["x"]).status_code == 422
+    assert registry.list_all() == []
+
+
 def test_delete_unknown_id_404(stack):  # C4 404 path (app/app.py:688-694)
     client, *_ = stack
     r = client.delete("/event-stream/9999")
@@ -119,10 +130,10 @@ def test_stopped_consumers_leave_no_checkpoint_state(stack):
     _, _, manager, log_root = stack
     EventLogWriter(log_root, "charges").publish('{"a": 1}', BASE_TS)
     for _ in range(3):
-        handle = manager.start_consumer("charges", starting_ordinal=0)
+        handle = manager.start_consumer("charges", seek={"startingOrdinal": 0})
         assert os.path.isdir(handle.checkpoint)
         manager.stop_consumer("charges")
-    manager.start_consumer("charges", starting_ordinal=0)
+    manager.start_consumer("charges", seek={"startingOrdinal": 0})
     manager.stop_all()
     root = manager.checkpoint_root
     assert not os.path.isdir(root) or os.listdir(root) == []
@@ -144,7 +155,7 @@ def test_stop_does_not_wait_on_a_full_hub(stack, spark, monkeypatch):
     w = EventLogWriter(log_root, "charges")
     for i in range(5):
         w.publish('{"a": %d}' % i, BASE_TS + i)
-    handle = manager.start_consumer("charges", starting_ordinal=0)
+    handle = manager.start_consumer("charges", seek={"startingOrdinal": 0})
     deadline = time.monotonic() + 60
     while not handle.hub.full() and time.monotonic() < deadline:
         time.sleep(0.1)

@@ -75,7 +75,8 @@ def test_ws_consume_with_ordinal_replay(ws_stack):
     c = WsClient(
         "127.0.0.1",
         server.port,
-        f"/event-stream/{rec['uuid']}?stream_from_ordinal=1",
+        # params other than stream_from_* are ignored, as in the reference
+        f"/event-stream/{rec['uuid']}?stream_from_ordinal=1&max_events=3&timeout_s=5",
     )
     msgs = []
     for _ in range(3):
@@ -117,8 +118,10 @@ def test_ws_mutually_exclusive_params_close_1002(ws_stack):
     )
     _, close = c.recv_text_or_close()
     c.shutdown()
-    assert close[0] == CLOSE_PROTOCOL_ERROR
-    assert "more than one 'stream_from_'" in close[1]
+    assert close == (
+        CLOSE_PROTOCOL_ERROR,
+        "Cannot provide more than one 'stream_from_' variable",
+    )
 
 
 def test_ws_missing_backing_stream_closes_1013(ws_stack):
@@ -481,21 +484,28 @@ def test_ws_bad_datetime_closes_1002_with_reference_message(ws_stack):
     assert close == (CLOSE_PROTOCOL_ERROR, "Unable to parse stream_from_datetime value")
 
 
-def test_consume_params_field_messages_and_precedence():
-    from squonk2_fastapi_ws_event_stream_spark.streaming.websocket import ConsumeParams
+def test_seek_position_field_messages_and_precedence():
+    from squonk2_fastapi_ws_event_stream_spark.sources.eventstream import seek_position
 
-    p = ConsumeParams.from_query("stream_from_ordinal=xyz")
-    assert p.error == "stream_from_ordinal must be an integer"
-    p = ConsumeParams.from_query("stream_from_timestamp=later")
-    assert p.error == "stream_from_timestamp must be an integer"
-    p = ConsumeParams.from_query("stream_from_datetime=2024-13-99")
-    assert p.error == "Unable to parse stream_from_datetime value"
-    # mutual exclusion REPLACES a per-field error (app/app.py:269-273)
-    p = ConsumeParams.from_query("stream_from_ordinal=xyz&stream_from_timestamp=1")
-    assert p.error == "Cannot provide more than one 'stream_from_' variable"
-    # valid datetime passes through unparsed (the source option parses it)
-    p = ConsumeParams.from_query("stream_from_datetime=2024-01-01T00:00:00%2B00:00")
-    assert p.error is None and p.starting_datetime == "2024-01-01T00:00:00+00:00"
-    # params other than stream_from_* are ignored, as in the reference
-    p = ConsumeParams.from_query("stream_from_ordinal=4&max_events=3&timeout_s=5")
-    assert p.error is None and p.starting_ordinal == 4
+    def error(seek):
+        with pytest.raises(ValueError) as exc:
+            seek_position(seek)
+        return str(exc.value)
+
+    assert error({"startingOrdinal": "xyz"}) == "stream_from_ordinal must be an integer"
+    assert error({"startingTimestampMs": "later"}) == (
+        "stream_from_timestamp must be an integer"
+    )
+    assert error({"startingDatetime": "2024-13-99"}) == (
+        "Unable to parse stream_from_datetime value"
+    )
+    # mutual exclusion wins over a per-field error (app/app.py:269-273)
+    assert error({"startingOrdinal": "xyz", "startingTimestampMs": "1"}) == (
+        "Cannot provide more than one 'stream_from_' variable"
+    )
+    assert seek_position({"startingDatetime": "2024-01-01T00:00:00+00:00"}) == (
+        "timestamp",
+        1_704_067_200_000,
+    )
+    assert seek_position({"startingOrdinal": "4"}) == ("ordinal", 4)
+    assert seek_position({}) == ("latest", None)
