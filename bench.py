@@ -752,12 +752,11 @@ def main() -> None:
 
 def _ws_delivery_bench(spark) -> dict:
     """End-to-end single-connection delivery: publisher log → manager
-    (foreachBatch → chunked hub) → stdlib WS server → real client socket,
-    measured from client connect to last frame. This is the path the
-    scaling curve does NOT exercise (the curve's foreachBatch counts
-    rows JVM-side); round 6 batched the hub handoff (one queue op per
-    micro-batch chunk) and the frame writes (one syscall per chunk), so
-    the per-connection ceiling is recorded here from now on."""
+    (foreachBatch writes each micro-batch to its WebSocket session in one
+    socket write) → real client socket, measured from client connect to
+    last frame. This is the path the scaling curve does NOT exercise (the
+    curve's foreachBatch counts rows JVM-side), so the per-connection
+    ceiling is recorded here."""
     import shutil
     import tempfile
 

@@ -9,16 +9,15 @@ and DELETE stops it synchronously (better than the reference, where an
 idle consumer lingers until the next message or a POISON pill,
 app/app.py:677-717; SURVEY §3.4).
 
-Delivery: each query runs `foreachBatch` → an in-process hub queue of wire
-strings that the WebSocket layer (websocket.py) drains into text frames
-(the WebSocket-sink pattern of SURVEY §2.7 K1). Every stop goes through
-`stop_consumer_handle` and puts nothing on the hub: the socket layer ends
-once the hub is drained and the query is no longer active.
+Delivery: each query's `foreachBatch` writes its wire strings straight to
+the consumer's sink, its WebSocket session (websocket.py), as the
+reference's callback awaits `websocket.send_text` (app/app.py:496-508;
+SURVEY §2.7 K1). Every stop goes through `stop_consumer_handle`, which
+closes the sink before it stops the query, so it never waits on a socket.
 """
 
 from __future__ import annotations
 
-import queue
 import shutil
 import threading
 import uuid
@@ -28,27 +27,22 @@ from pyspark.sql import SparkSession
 
 from ..sources.eventstream import EventStreamDataSource
 from .pipeline import annotate
-
-# The hub hands the socket layer CHUNKS (lists of wire strings), one queue
-# item per micro-batch slice, so a 20k-message replay batch costs ~10
-# queue operations instead of 20k — per-row Queue.put/get was the
-# per-connection delivery ceiling (round-6 task #6). Backpressure:
-# maxsize counts chunks, so the bound is CHUNK_ROWS x maxsize = 32k
-# buffered messages per connection (vs 10k before — same order).
-CHUNK_ROWS = 2048
-HUB_MAX_CHUNKS = 16
+from .websocket import CLOSE_NORMAL
 
 
 @dataclass
 class ConsumerHandle:
     stream: str
-    hub: "queue.Queue[list[str] | None]"
+    # Where the consumer delivers: `send(texts)` writes one batch of wire
+    # strings and raises OSError once delivery is over; `close(code)` ends
+    # delivery, and only its first call counts.
+    sink: object
     # Unique per start and removed on stop: every start seeks from the
     # client's parameters, so no consumer ever resumes from a checkpoint.
     checkpoint: str
     query: object = None
     # Set once the consumer will deliver nothing more: its POISON pill
-    # arrived or a stop began. A query that ends without it failed.
+    # arrived, its sink refused a batch, or a stop began.
     ended: bool = False
     stats: dict = field(default_factory=lambda: {"received": 0, "sent": 0})
 
@@ -62,15 +56,15 @@ class StreamManager:
         self._lock = threading.Lock()
         spark.dataSource.register(EventStreamDataSource)
 
-    def start_consumer(self, stream: str, seek: dict | None = None) -> ConsumerHandle:
-        """Start (or replace) the single consumer for a stream. ``seek``
-        maps seek option names to raw values; the source parses them
-        (`eventstream.seek_position`)."""
+    def start_consumer(self, stream: str, sink, seek: dict | None = None) -> ConsumerHandle:
+        """Start (or replace) the single consumer for a stream, delivering
+        to ``sink``. ``seek`` maps seek option names to raw values; the
+        source parses them (`eventstream.seek_position`)."""
         self.stop_consumer(stream)
 
         handle = ConsumerHandle(
             stream=stream,
-            hub=queue.Queue(maxsize=HUB_MAX_CHUNKS),
+            sink=sink,
             checkpoint=f"{self.checkpoint_root}/{stream}-{uuid.uuid4().hex}",
         )
 
@@ -85,22 +79,11 @@ class StreamManager:
         # socket per stream).
         relayed = annotate(reader.load()).select("offset", "out", "is_poison")
 
-        def offer(item) -> bool:
-            # A stop sets `ended`, then waits for this batch: give up within
-            # a tick rather than wait on a socket that may be gone.
-            while not handle.ended:
-                try:
-                    handle.hub.put(item, timeout=0.25)
-                    return True
-                except queue.Full:
-                    pass
-            return False
-
         def push_batch(batch_df, batch_id):  # runs on the driver per micro-batch
             if handle.ended:
                 return
             # One Arrow-batched collect; the wire strings cross as a column
-            # and reach the hub in ~batch/CHUNK_ROWS queue operations.
+            # and reach the socket in one write per batch.
             tbl = batch_df.toArrow().sort_by("offset")
             outs = tbl["out"].to_pylist()
             poisons = tbl["is_poison"].to_pylist()
@@ -114,17 +97,18 @@ class StreamManager:
                 cut = len(outs)
                 poisoned = False
             handle.stats["received"] += cut + (1 if poisoned else 0)
-            chunk = [s for s in outs[:cut] if s is not None]
-            for i in range(0, len(chunk), CHUNK_ROWS):
-                piece = chunk[i : i + CHUNK_ROWS]
-                if not offer(piece):
-                    return
-                handle.stats["sent"] += len(piece)
-            if poisoned:
-                # The socket layer closes on the sentinel and its teardown
-                # stops this handle.
-                offer(None)
+            texts = [s for s in outs[:cut] if s is not None]
+            try:
+                handle.sink.send(texts)
+            except OSError:  # the client is gone or a stop closed the sink
                 handle.ended = True
+                return
+            handle.stats["sent"] += len(texts)
+            if poisoned:
+                # The close ends the session, whose teardown stops this
+                # handle: a query cannot stop itself from inside a batch.
+                handle.ended = True
+                handle.sink.close(CLOSE_NORMAL)
 
         handle.query = (
             relayed.writeStream.foreachBatch(push_batch)
@@ -156,6 +140,9 @@ class StreamManager:
     @staticmethod
     def stop_consumer_handle(handle: ConsumerHandle) -> None:
         handle.ended = True
+        # Close first: a batch blocked writing to a client that stopped
+        # reading then fails at once, so query.stop() does not wait on it.
+        handle.sink.close(CLOSE_NORMAL)
         handle.query.stop()
         shutil.rmtree(handle.checkpoint, ignore_errors=True)
 

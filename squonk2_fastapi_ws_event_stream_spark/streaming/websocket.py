@@ -10,6 +10,7 @@ send site is ``websocket.send_text`` at :496-508). Close-code parity:
     1000  unknown EventStream uuid       (app/app.py:287-291)
     1013  backing stream does not exist  (app/app.py:314-318)
     1000  normal end (POISON / server stop / client close)
+    1009  a client frame over MAX_FRAME_BYTES
     1011  the consumer's query failed; the reason is its exception
 
 Like the reference, the server ACCEPTS the socket first (app/app.py:212)
@@ -22,9 +23,9 @@ b64(sha1(key + GUID))``; frames are FIN|opcode, MASK|len7 (126 → u16,
 127 → u64), optional 4-byte mask, payload XOR mask[i % 4]. Client→server
 frames MUST be masked, server→client MUST NOT be.
 
-The data plane is untouched: Spark Structured Streaming relays messages
-into each consumer's hub queue (manager.py); this module only drains the
-hub into WS frames — exactly the K1 "WebSocket sink" seam of SURVEY §2.7.
+The data plane is untouched: each session is its consumer's sink, which
+the consumer's `foreachBatch` (manager.py) calls `send` and `close` on —
+exactly the K1 "WebSocket sink" seam of SURVEY §2.7.
 """
 
 from __future__ import annotations
@@ -32,12 +33,13 @@ from __future__ import annotations
 import base64
 import hashlib
 import http.server
-import queue
 import socket
 import socketserver
 import struct
 import threading
 import urllib.parse
+
+from pyspark.errors import StreamingQueryException
 
 from ..sources.eventstream import seek_position, stream_exists
 
@@ -47,12 +49,22 @@ OP_CONT, OP_TEXT, OP_BINARY, OP_CLOSE, OP_PING, OP_PONG = 0x0, 0x1, 0x2, 0x8, 0x
 
 CLOSE_NORMAL = 1000
 CLOSE_PROTOCOL_ERROR = 1002
+CLOSE_MESSAGE_TOO_BIG = 1009
 CLOSE_INTERNAL_ERROR = 1011
 CLOSE_TRY_AGAIN_LATER = 1013
 
 # A close frame is a control frame: at most 125 payload bytes, two of them
 # the code (RFC 6455 §5.5).
 MAX_CLOSE_REASON_BYTES = 123
+
+# The largest frame read: uvicorn's default `ws_max_size`, the server the
+# reference runs under. A frame declaring more is refused before its
+# payload is read, so a client cannot make the server allocate it.
+MAX_FRAME_BYTES = 16 * 1024 * 1024
+
+# How long a close waits for a write in progress before it shuts the socket
+# down, which fails that write (its client may have stopped reading).
+CLOSE_WAIT_S = 1.0
 
 # The C5 query params and the source options they pass to, unparsed: the
 # source's `seek_position` is their one parser. Any other param is ignored
@@ -92,6 +104,10 @@ def encode_frame(opcode: int, payload: bytes, mask: bool = False) -> bytes:
     return head + payload
 
 
+class FrameTooLarge(ValueError):
+    """A frame declared more than MAX_FRAME_BYTES of payload."""
+
+
 def _read_exact(rfile, n: int) -> bytes:
     buf = b""
     while len(buf) < n:
@@ -104,7 +120,8 @@ def _read_exact(rfile, n: int) -> bytes:
 
 def read_frame(rfile) -> tuple[int, bytes]:
     """Read one frame; returns (opcode, unmasked payload). Raises
-    ConnectionError on EOF."""
+    ConnectionError on EOF and FrameTooLarge for a frame over
+    MAX_FRAME_BYTES, before its payload is read."""
     b0, b1 = _read_exact(rfile, 2)
     opcode = b0 & 0x0F
     masked = bool(b1 & 0x80)
@@ -113,6 +130,8 @@ def read_frame(rfile) -> tuple[int, bytes]:
         (n,) = struct.unpack("!H", _read_exact(rfile, 2))
     elif n == 127:
         (n,) = struct.unpack("!Q", _read_exact(rfile, 8))
+    if n > MAX_FRAME_BYTES:
+        raise FrameTooLarge(f"frame of {n} bytes exceeds the {MAX_FRAME_BYTES}-byte limit")
     key = _read_exact(rfile, 4) if masked else None
     payload = _read_exact(rfile, n)
     if key:
@@ -148,11 +167,12 @@ class _WsHandler(http.server.BaseHTTPRequestHandler):
 
     def setup(self) -> None:
         super().setup()
-        # Serializes ALL socket writes: the ping-reader thread answers
-        # PONG concurrently with the delivery loop's text/close frames,
+        # Serializes ALL socket writes: the reader thread answers PING
+        # concurrently with the consumer's batches and the close frame,
         # and two unlocked sendall()s can interleave bytes mid-frame,
         # corrupting the WS stream.
         self._wlock = threading.Lock()
+        self._closing = threading.Lock()  # held by the first close, the only one
 
     def log_message(self, format: str, *args) -> None:
         pass  # no access log
@@ -185,15 +205,37 @@ class _WsHandler(http.server.BaseHTTPRequestHandler):
         self.close_connection = True
         self._consume(path_parts[1], url.query)
 
-    def _send(self, buf: bytes) -> None:
-        """The one socket write path: one write + flush under the lock."""
-        with self._wlock:
+    def _send(self, buf: bytes, closing: bool = False) -> None:
+        """The one socket write path: one write + flush under the lock. Once
+        a close began only its frame is written, after waiting at most
+        CLOSE_WAIT_S for a write in progress."""
+        if not self._wlock.acquire(timeout=CLOSE_WAIT_S if closing else -1):
+            return
+        try:
+            if self._closing.locked() and not closing:
+                raise ConnectionError("the WebSocket is closed")
             self.wfile.write(buf)
             self.wfile.flush()
+        finally:
+            self._wlock.release()
 
-    def _close(self, code: int, reason: str = "") -> None:
+    def send(self, texts: list[str]) -> None:
+        """Write one batch of wire strings as text frames, in one write.
+        Raises OSError once the session is closed or its client is gone."""
+        self._send(b"".join(encode_frame(OP_TEXT, t.encode()) for t in texts))
+
+    def close(self, code: int, reason: str = "") -> None:
+        """Send the close frame and shut the socket down; only the first
+        close counts. The shutdown fails a write blocked on a client that
+        stopped reading, and ends the reader thread's read."""
+        if not self._closing.acquire(blocking=False):
+            return
         try:
-            self._send(encode_frame(OP_CLOSE, close_payload(code, reason)))
+            self._send(encode_frame(OP_CLOSE, close_payload(code, reason)), closing=True)
+        except OSError:
+            pass
+        try:
+            self.connection.shutdown(socket.SHUT_RDWR)
         except OSError:
             pass
 
@@ -205,64 +247,45 @@ class _WsHandler(http.server.BaseHTTPRequestHandler):
         try:
             seek_position(seek)
         except ValueError as exc:
-            self._close(CLOSE_PROTOCOL_ERROR, str(exc))
+            self.close(CLOSE_PROTOCOL_ERROR, str(exc))
             return
         rec = server.registry.get_by_uuid(es_uuid)
         if rec is None:
             # app/app.py:287-291 — exact reference message, uuid included
-            self._close(CLOSE_NORMAL, f"Connect for unknown EventStream {es_uuid}")
+            self.close(CLOSE_NORMAL, f"Connect for unknown EventStream {es_uuid}")
             return
         if not stream_exists(server.manager.log_root, rec["routing_key"]):
             # app/app.py:314-318 — exact reference message, uuid included
-            self._close(CLOSE_TRY_AGAIN_LATER, f"EventStream {es_uuid} cannot be found")
+            self.close(CLOSE_TRY_AGAIN_LATER, f"EventStream {es_uuid} cannot be found")
             return
 
-        handle = server.manager.start_consumer(rec["routing_key"], seek=seek)
-
-        # Watch for client frames (close / ping) without blocking delivery.
-        client_closed = threading.Event()
+        handle = server.manager.start_consumer(rec["routing_key"], self, seek=seek)
 
         def reader() -> None:
+            # The client's side: answer PING. A CLOSE frame, EOF or any
+            # error ends the session; the stop sends the close echo.
             try:
-                while not client_closed.is_set():
+                while True:
                     opcode, payload = read_frame(self.rfile)
                     if opcode == OP_CLOSE:
-                        client_closed.set()
                         return
                     if opcode == OP_PING:
                         self._send(encode_frame(OP_PONG, payload))
-            except (ConnectionError, OSError):
-                client_closed.set()
+            except FrameTooLarge as exc:
+                self.close(CLOSE_MESSAGE_TOO_BIG, str(exc))
+            except (OSError, ValueError):
+                pass  # WebSocketDisconnect analog (app/app.py:503-508): drop
+            finally:
+                server.manager.stop_consumer(rec["routing_key"], handle)
 
-        rt = threading.Thread(target=reader, daemon=True)
-        rt.start()
-
-        code, reason = CLOSE_NORMAL, ""
+        threading.Thread(target=reader, daemon=True).start()
+        # Delivery runs in the consumer's batches. A POISON pill or a stop
+        # has closed the session by the time the query ends; a query that
+        # fails closes it here.
         try:
-            # Poll the hub in short ticks so a client close frame (observed
-            # by the reader thread) interrupts an idle stream promptly.
-            # Besides a client close and the POISON sentinel there is one
-            # end rule: the hub is drained and the query is no longer
-            # active. A query that ended without a stop or a pill failed.
-            while not client_closed.is_set():
-                try:
-                    chunk = handle.hub.get(timeout=0.25)
-                except queue.Empty:
-                    if handle.query.isActive or not handle.hub.empty():
-                        continue
-                    if not handle.ended:
-                        code, reason = CLOSE_INTERNAL_ERROR, str(handle.query.exception())
-                    break
-                if chunk is None:  # the POISON pill
-                    break
-                # one micro-batch slice, one write
-                self._send(b"".join(encode_frame(OP_TEXT, t.encode()) for t in chunk))
-            self._close(code, reason)
-        except (ConnectionError, OSError):
-            pass  # WebSocketDisconnect analog (app/app.py:503-508): drop
-        finally:
-            client_closed.set()
-            server.manager.stop_consumer(rec["routing_key"], handle)
+            handle.query.awaitTermination()
+        except StreamingQueryException as exc:
+            self.close(CLOSE_INTERNAL_ERROR, str(exc))
 
 
 class EventStreamWsServer(socketserver.ThreadingTCPServer):

@@ -17,6 +17,16 @@ from squonk2_fastapi_ws_event_stream_spark.streaming.manager import StreamManage
 BASE_TS = 1_700_000_000_000
 
 
+class _Sink:
+    """A consumer's sink that drops what it is sent (no socket)."""
+
+    def send(self, texts):
+        pass
+
+    def close(self, code, reason=""):
+        self.closed = code
+
+
 @pytest.fixture()
 def stack(spark, tmp_path):
     log_root = str(tmp_path / "log")
@@ -80,8 +90,6 @@ def test_delete_unknown_id_404(stack):  # C4 404 path (app/app.py:688-694)
 def test_stale_teardown_does_not_stop_replacement_consumer(stack, tmp_path):
     # A teardown path holding an old handle (a finished socket) must not
     # knock out a consumer that replaced it by name.
-    import queue
-
     from squonk2_fastapi_ws_event_stream_spark.streaming.manager import ConsumerHandle
 
     _, _, manager, _ = stack
@@ -98,7 +106,7 @@ def test_stale_teardown_does_not_stop_replacement_consumer(stack, tmp_path):
     def fake_handle(name):
         return ConsumerHandle(
             stream="s",
-            hub=queue.Queue(),
+            sink=_Sink(),
             checkpoint=str(tmp_path / name),
             query=_FakeQuery(),
         )
@@ -108,7 +116,7 @@ def test_stale_teardown_does_not_stop_replacement_consumer(stack, tmp_path):
 
     manager.stop_consumer("s", old)
     assert old.query.stopped  # the stale handle itself is released
-    assert old.ended  # and its socket loop ends once the hub is drained
+    assert old.ended and old.sink.closed == 1000  # and its session is closed
     assert not new.query.stopped  # the replacement keeps running
     assert manager._consumers["s"] is new
 
@@ -130,47 +138,48 @@ def test_stopped_consumers_leave_no_checkpoint_state(stack):
     _, _, manager, log_root = stack
     EventLogWriter(log_root, "charges").publish('{"a": 1}', BASE_TS)
     for _ in range(3):
-        handle = manager.start_consumer("charges", seek={"startingOrdinal": 0})
+        handle = manager.start_consumer("charges", _Sink(), seek={"startingOrdinal": 0})
         assert os.path.isdir(handle.checkpoint)
         manager.stop_consumer("charges")
-    manager.start_consumer("charges", seek={"startingOrdinal": 0})
+    manager.start_consumer("charges", _Sink(), seek={"startingOrdinal": 0})
     manager.stop_all()
     root = manager.checkpoint_root
     assert not os.path.isdir(root) or os.listdir(root) == []
 
 
-def test_stop_does_not_wait_on_a_full_hub(stack, spark, monkeypatch):
-    """A stop never waits on the socket: a batch blocked on a full hub (its
-    client gone or slow) gives up once the stop begins, so query.stop()
-    returns and the query does not leak."""
-    import queue
+def test_stop_does_not_wait_on_a_blocked_send(stack, spark):
+    """A stop never waits on the socket: it closes the sink first, which
+    fails a batch's send blocked on a client that stopped reading, so
+    query.stop() returns and the query does not leak."""
     import threading
-    import time
 
-    from squonk2_fastapi_ws_event_stream_spark.streaming import manager as manager_mod
+    class BlockingSink:
+        def __init__(self):
+            self.sending, self.closing = threading.Event(), threading.Event()
 
-    monkeypatch.setattr(manager_mod, "CHUNK_ROWS", 1)
-    monkeypatch.setattr(manager_mod, "HUB_MAX_CHUNKS", 1)
+        def send(self, texts):
+            self.sending.set()
+            self.closing.wait()
+            raise ConnectionError("the sink is closed")
+
+        def close(self, code, reason=""):
+            self.closing.set()
+
     _, _, manager, log_root = stack
     w = EventLogWriter(log_root, "charges")
     for i in range(5):
         w.publish('{"a": %d}' % i, BASE_TS + i)
-    handle = manager.start_consumer("charges", seek={"startingOrdinal": 0})
-    deadline = time.monotonic() + 60
-    while not handle.hub.full() and time.monotonic() < deadline:
-        time.sleep(0.1)
-    assert handle.hub.full()
+    sink = BlockingSink()
+    handle = manager.start_consumer("charges", sink, seek={"startingOrdinal": 0})
+    assert sink.sending.wait(60)
 
     stopper = threading.Thread(target=manager.stop_consumer, args=("charges",), daemon=True)
     stopper.start()
     stopper.join(timeout=20)
     stuck = stopper.is_alive()
-    while stopper.is_alive():  # a stop that waits on the hub: drain it to end the test
-        try:
-            handle.hub.get(timeout=0.1)
-        except queue.Empty:
-            pass
-    assert not stuck, "stop_consumer waited on a full hub"
+    sink.closing.set()  # a stop that waits on the send: release it to end the test
+    stopper.join()
+    assert not stuck, "stop_consumer waited on a blocked send"
     assert handle.query.id not in {q.id for q in spark.streams.active}
 
 

@@ -9,14 +9,21 @@ Spark Structured Streaming relay → WS frames back to a stdlib client.
 from __future__ import annotations
 
 import json
+import struct
+import threading
+import time
 
 import pytest
 
 from squonk2_fastapi_ws_event_stream_spark.sources.eventstream import EventLogWriter
 from squonk2_fastapi_ws_event_stream_spark.sources.registry import Registry
-from squonk2_fastapi_ws_event_stream_spark.streaming.manager import StreamManager
+from squonk2_fastapi_ws_event_stream_spark.streaming.manager import (
+    ConsumerHandle,
+    StreamManager,
+)
 from squonk2_fastapi_ws_event_stream_spark.streaming.websocket import (
     CLOSE_INTERNAL_ERROR,
+    CLOSE_MESSAGE_TOO_BIG,
     CLOSE_NORMAL,
     CLOSE_PROTOCOL_ERROR,
     CLOSE_TRY_AGAIN_LATER,
@@ -43,6 +50,60 @@ def ws_stack(spark, tmp_path):
     yield server, registry, manager, log_root
     server.stop()
     manager.stop_all()
+
+
+class _FakeQuery:
+    """A query that runs until it is stopped (no Spark)."""
+
+    def __init__(self):
+        self._stopped = threading.Event()
+
+    def awaitTermination(self):
+        self._stopped.wait()
+
+    def stop(self):
+        self._stopped.set()
+
+
+@pytest.fixture()
+def fake_stack(tmp_path):
+    """The WS server over a fake registry and manager, no Spark: every uuid
+    names stream "charges", whose consumer delivers only what a test sends
+    to its sink. Yields the server, the started handles and the handles
+    passed to each stop."""
+    log_root = str(tmp_path / "log")
+    EventLogWriter(log_root, "charges").publish('{"a": 1}', BASE_TS)
+    started, stopped = [], []
+
+    class FakeRegistry:
+        def get_by_uuid(self, es_uuid):
+            return {"routing_key": "charges"}
+
+    class FakeManager:
+        def __init__(self):
+            self.log_root = log_root
+
+        def start_consumer(self, stream, sink, seek=None):
+            handle = ConsumerHandle(
+                stream=stream, sink=sink, checkpoint=str(tmp_path / "ckpt"), query=_FakeQuery()
+            )
+            started.append(handle)
+            return handle
+
+        def stop_consumer(self, stream, handle=None):
+            stopped.append(handle)
+            StreamManager.stop_consumer_handle(handle)
+
+    server = EventStreamWsServer(FakeRegistry(), FakeManager()).start_background()
+    yield server, started, stopped
+    server.stop()
+
+
+def _wait_for(predicate, seconds: float) -> bool:
+    deadline = time.monotonic() + seconds
+    while not predicate() and time.monotonic() < deadline:
+        time.sleep(0.05)
+    return predicate()
 
 
 # -- pure protocol units ----------------------------------------------------
@@ -216,53 +277,135 @@ def test_ws_failed_query_closes_1011(ws_stack):
     assert reason and len(reason.encode("utf-8")) <= 123
 
 
-def test_ws_stopped_consumer_with_full_hub_closes_1000(tmp_path):
-    """One end rule, no Spark: a drained hub and an inactive query end the
-    session. A stop that found the hub full puts nothing on it, and the
-    socket still delivers what is queued and then closes normally."""
-    import queue
-    from types import SimpleNamespace
-
-    from squonk2_fastapi_ws_event_stream_spark.streaming.manager import ConsumerHandle
-
-    log_root = str(tmp_path / "log")
-    EventLogWriter(log_root, "charges").publish('{"a": 1}', BASE_TS)
-    hub = queue.Queue(maxsize=1)
-    hub.put(["queued"])
-    handle = ConsumerHandle(
-        stream="charges",
-        hub=hub,
-        checkpoint=str(tmp_path / "ckpt"),
-        query=SimpleNamespace(isActive=False, exception=lambda: None),
-        ended=True,
+def test_stop_ends_a_session_whose_client_stopped_reading(ws_stack):
+    """A stop must not leave a session hanging on a client that stopped
+    reading but did not disconnect: the stop returns, and the session's
+    handler thread, blocked writing ~25 MB the client never reads, ends."""
+    server, registry, manager, log_root = ws_stack
+    w = EventLogWriter(log_root, "charges")
+    pad = "x" * 65_000
+    for i in range(400):
+        w.publish('{"message_type": "t", "message_body": {"pad": "%s"}}' % pad, BASE_TS + i)
+    rec = registry.create("charges")
+    before = set(threading.enumerate())
+    c = WsClient(
+        "127.0.0.1", server.port, f"/event-stream/{rec['uuid']}?stream_from_ordinal=0"
     )
-    stopped = []
-
-    class FakeRegistry:
-        def get_by_uuid(self, es_uuid):
-            return {"routing_key": "charges"}
-
-    class FakeManager:
-        def __init__(self):
-            self.log_root = log_root
-
-        def start_consumer(self, stream, **_):
-            return handle
-
-        def stop_consumer(self, stream, h=None):
-            stopped.append(h)
-
-    server = EventStreamWsServer(FakeRegistry(), FakeManager()).start_background()
     try:
-        c = WsClient("127.0.0.1", server.port, "/event-stream/u", timeout=5)
+        handlers = [
+            t for t in set(threading.enumerate()) - before
+            if "process_request" in t.name
+        ]
+        assert len(handlers) == 1
+        # the batch has reached delivery; give the write time to fill the buffers
+        assert _wait_for(
+            lambda: manager.snapshot().get("charges", {}).get("received"), 120
+        )
+        time.sleep(1)
+        stopper = threading.Thread(target=manager.stop_consumer, args=("charges",), daemon=True)
+        stopper.start()
+        stopper.join(timeout=20)
+        assert not stopper.is_alive(), "stop_consumer waited on the socket"
+        handlers[0].join(timeout=10)
+        assert not handlers[0].is_alive(), "the session still writes to a client that does not read"
+    finally:
+        c.shutdown()
+
+
+def test_concurrent_starts_each_replay_and_close_on_poison(ws_stack):
+    """Four clients connect at once to four streams: each gets its replay
+    and then close 1000 on the POISON pill."""
+    server, registry, manager, log_root = ws_stack
+    uuids = []
+    for k in range(4):
+        w = EventLogWriter(log_root, f"s{k}")
+        for i in range(3):
+            w.publish('{"message_type": "t", "message_body": {"sqn": %d}}' % i, BASE_TS + i)
+        w.publish("POISON", BASE_TS + 3)
+        uuids.append(registry.create(f"s{k}")["uuid"])
+    gate = threading.Barrier(len(uuids))
+    results = {}
+
+    def consume(uuid):
+        gate.wait()
+        c = WsClient(
+            "127.0.0.1", server.port, f"/event-stream/{uuid}?stream_from_ordinal=0", timeout=120
+        )
+        ordinals, close = [], None
         try:
-            assert c.recv_text_or_close() == ("queued", None)
-            assert c.recv_text_or_close() == (None, (CLOSE_NORMAL, ""))
+            while close is None:
+                text, close = c.recv_text_or_close()
+                if text is not None:
+                    ordinals.append(json.loads(text)["ess_ordinal"])
         finally:
             c.shutdown()
+            results[uuid] = (ordinals, close)
+
+    clients = [threading.Thread(target=consume, args=(u,), daemon=True) for u in uuids]
+    for t in clients:
+        t.start()
+    for t in clients:
+        t.join(timeout=180)
+    assert results == {u: ([1, 2, 3], (CLOSE_NORMAL, "")) for u in uuids}
+
+
+def test_ws_close_fails_a_send_blocked_on_a_client_that_does_not_read(fake_stack):
+    """No Spark: a session delivers its sink's sends, and its close fails a
+    send blocked on a client that stopped reading, within the close's
+    bounded wait. Nothing is written after the close, and the session's
+    teardown stops its consumer."""
+    server, started, stopped = fake_stack
+    c = WsClient("127.0.0.1", server.port, "/event-stream/u", timeout=10)
+    try:
+        assert _wait_for(lambda: started, 10)
+        sink = started[0].sink
+        sink.send(["first", "second"])
+        assert c.recv_text_or_close() == ("first", None)
+        assert c.recv_text_or_close() == ("second", None)
+
+        # 25 MB, more than the socket buffers hold: the client reads no more
+        errors = []
+
+        def send_big():
+            try:
+                sink.send(["x" * 65_536] * 400)
+            except OSError as exc:
+                errors.append(exc)
+
+        sender = threading.Thread(target=send_big, daemon=True)
+        sender.start()
+        sender.join(timeout=1)
+        assert sender.is_alive(), "the send should block on a client that does not read"
+        t0 = time.monotonic()
+        sink.close(CLOSE_NORMAL)
+        sender.join(timeout=10)
+        assert not sender.is_alive() and errors
+        assert time.monotonic() - t0 < 5
+        with pytest.raises(OSError):
+            sink.send(["after the close"])
+        assert _wait_for(lambda: stopped, 10)
+        assert stopped == [started[0]]
     finally:
-        server.stop()
-    assert stopped == [handle]
+        c.shutdown()
+
+
+def test_oversized_client_frame_closes_1009(fake_stack):
+    """A client frame over 16 MiB is refused with 1009 before its payload
+    is read (a declared 2^62 bytes used to kill the reader thread with a
+    MemoryError, so the session never saw a close), and the consumer is
+    stopped."""
+    server, started, stopped = fake_stack
+    c = WsClient("127.0.0.1", server.port, "/event-stream/u", timeout=10)
+    try:
+        assert _wait_for(lambda: started, 10)
+        # FIN|text, MASK|127, a 64-bit length, a mask key, and no payload
+        c.sock.sendall(bytes([0x81, 0x80 | 127]) + struct.pack("!Q", 1 << 62) + b"mask")
+        text, close = c.recv_text_or_close()
+    finally:
+        c.shutdown()
+    assert text is None and close[0] == CLOSE_MESSAGE_TOO_BIG
+    assert _wait_for(lambda: stopped, 10)
+    assert stopped == [started[0]]
 
 
 def test_ws_close_reason_is_cut_to_rfc_limit(ws_stack):
@@ -405,8 +548,8 @@ def test_second_ws_consumer_replaces_first(ws_stack):
     """The reference's arbitration rule: at most one live consumer per
     stream, newest connection wins (memcached knock-out,
     app/app.py:320-344,451-462). Spark-native form: start_consumer
-    replaces the StreamingQuery, and the first socket's delivery loop ends
-    with a normal close once its stopped query's hub is drained."""
+    replaces the StreamingQuery, and stopping the first consumer closes
+    the first socket normally."""
     import threading
     import time
 
