@@ -25,8 +25,5 @@ python -m pytest tests/ -q
 echo "=== driver-gate parity (sf0.01) ==="
 ORACLE_PARITY_SF=/root/testdata/sf0.01 python -m pytest tests/test_oracle_parity.py -q
 
-echo "=== twin bit-identity one SF up (sf0.01) ==="
-TWIN_SF=/root/testdata/sf0.01 python -m pytest tests/test_stateful.py -q
-
 echo "=== bench (sf0.1, gated vs per-query best-ever committed) ==="
 python bench.py --check

@@ -43,11 +43,9 @@ ROWS_PER_BAND = N_PERM // N_BANDS
 
 SIMHASH_BITS = 32
 
-# k-minimum-values sketch family — the SINGLE source for both the batch
-# column-NDV sketch (plans/relational2.py x25b) and the streaming
-# kmv_distinct operator (streaming/stateful.py). Their documented
-# bit-compatibility guarantee (a batch KMV over the same log computes the
-# identical sketch) holds exactly because neither re-declares these.
+# k-minimum-values sketch family — the SINGLE source for the batch KMV
+# plans (plans/pipeline.py x13, plans/relational2.py x25b) and their
+# oracles, which agree bit for bit because neither re-declares these.
 # Affine hash h(k) = ((k mod P)·A + B) mod P with both factors reduced
 # mod P first, so k up to 2^63 never overflows int64.
 KMV_P = P
@@ -56,10 +54,8 @@ KMV_B = 1723
 KMV_K = 64
 
 # AMS F2 sign-hash family (Alon–Matias–Szegedy '96) — the SINGLE source
-# for both the batch second-moment sketch (plans/pipeline.py x27) and the
-# streaming ams_f2 operator (streaming/stateful.py), the same
-# one-declaration discipline as the KMV block above: their bit-identity
-# guarantee holds exactly because neither re-declares these.
+# for the batch second-moment sketch (plans/pipeline.py x27) and its
+# oracle, the same one-declaration discipline as the KMV block above.
 # s_i(key) = 1 - 2·((key·A_i + B_i) mod P mod 2) ∈ {±1}.
 AMS_D = 8
 AMS_A = [4973, 6203, 7369, 8539, 9679, 10837, 11953, 13147]

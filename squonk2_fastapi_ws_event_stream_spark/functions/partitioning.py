@@ -18,8 +18,7 @@ from reading it all:
 
 Both are proven by plan + result tests in
 ``tests/test_partition_pruning.py`` (the bucketing test's sibling).
-Partition-column choice mirrors the archive sink
-(``streaming/archive.py``): low-cardinality, append-aligned (dates),
+Partition-column choice: low-cardinality, append-aligned (dates),
 never a high-NDV key — a 100 TB table wants thousands of partitions,
 not millions of tiny files (x24's compaction planner prices exactly
 that failure mode).

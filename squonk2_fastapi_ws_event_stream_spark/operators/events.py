@@ -313,8 +313,8 @@ FROM lagged WHERE ord - prev_ord > 1
 
 
 def e09_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly tumbling-window aggregate (extension per SURVEY §2.9; the
-    streaming twin uses window()+watermark in streaming/pipeline.py)."""
+    """Hourly tumbling-window aggregate (extension per SURVEY §2.9; a
+    streaming query would use window()+watermark)."""
     ev = table(spark, sf_dir, "events")
     win = F.window(F.col("ts"), "1 hour")
     return (
@@ -342,8 +342,7 @@ FROM events GROUP BY 1, 2
 
 
 # A silence longer than this starts a new session — the ONE session rule
-# shared by e10/e24/e25 (batch) and their oracles; the streaming twin is
-# session_window in streaming/pipeline.py.
+# shared by e10/e24/e25 (batch) and their oracles.
 SESSION_GAP_MS = 30 * 60 * 1000
 
 
@@ -677,9 +676,6 @@ FROM events GROUP BY event_type
 # buckets), the join matches on the bucket key, and the exact interval
 # predicate filters the at-most-10-minutes of candidates. Candidates per
 # click are bounded by the user's event rate, not history length.
-# Streaming twin: stream-stream join with watermarks + time-range
-# condition (tests/test_streaming_joins.py) — Spark compiles that to the
-# same bounded-state shape.
 # ---------------------------------------------------------------------------
 E16_WINDOW_US = 300_000_000  # 5 minutes
 
@@ -2942,8 +2938,7 @@ def e41_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
             # round-10 conversion: exact value-unit micros via truncating
             # decimal DIV (vt is cents·us in decimal(38,0); ×1e4 = micros
             # of the value mean) — the old ROUND(double quotient, 4) was
-            # t09-class. The streaming twin's twap_milli is the same
-            # integral at milli precision.
+            # t09-class.
             (F.expr("vt * 10000 DIV dur_us") / 1_000_000.0).alias("twap"),
             (F.expr("CAST(cents_sum AS DECIMAL(38,0)) * 10000 DIV n_obs") / 1_000_000.0).alias(
                 "naive_mean"
@@ -2989,8 +2984,7 @@ ORACLES["e41_time_weighted_avg"] = ORACLE_E41
 # mark of everything that ARRIVED before it minus its own event time —
 # exactly what a streaming watermark sees — bucketed on the exact
 # floor(log2) scale (the t22 bits trick, no libm). The readout that
-# tunes `withWatermark` retention for every streaming operator in
-# streaming/aggregates.py.
+# tunes a streaming query's `withWatermark` retention.
 #
 # Scale — two-level running max, no corpus-wide window: the running
 # high-water mark over arrival order decomposes into (a) an intra-hour
@@ -3775,11 +3769,10 @@ ORACLES["e49_duplicate_event_audit"] = ORACLE_E49
 
 
 # ---------------------------------------------------------------------------
-# e50 — token-bucket REPLAY: the batch twin of the streaming rate_limiter
-# (streaming/stateful.py — reference parity note: the reference relay,
-# app/app.py, serves each WebSocket with no backpressure policy; the rate
-# limiter is the deterministic shed this engine adds, and this query is
-# its audit/backfill form). Replays the EXACT refill arithmetic over the
+# e50 — token-bucket REPLAY (reference parity note: the reference relay,
+# app/app.py, serves each WebSocket with no backpressure policy; an
+# event-time token bucket is a deterministic shed, and this query is its
+# audit/backfill form). Replays the EXACT refill arithmetic over the
 # events log per user: tokens refill at E50_RATE_MILLI milli-tokens per
 # second of EVENT time (integer micros x rate // 1e6 — no floats), capped
 # at E50_BURST whole tokens; each message costs 1000 milli-tokens; an
@@ -3840,8 +3833,7 @@ def e50_token_bucket_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             ELSE (x.us - element_at(log, i).us) * {E50_RATE_MILLI}
                  div 1000000000 END)"""
     )
-    # fold state: (tokens_milli, n_accepted); refill BEFORE the charge,
-    # mirroring streaming/stateful.py _update_rate exactly
+    # fold state: (tokens_milli, n_accepted); refill BEFORE the charge
     refilled = lambda acc, g: F.least(
         F.lit(burst_milli).cast("long"), acc["t"] + g
     )
@@ -3892,7 +3884,7 @@ def _e50_exact_div_1e9(p):
 # helper re-evaluated 4x per element; round 12 hoisted it into the
 # `refills` transform above — min(burst, t + g) is all the fold computes
 # now.  `div` on the non-negative long products is bit-identical to the
-# oracle's `//` and the streaming twin's Python `//`; the int64 product
+# oracle's `//`; the int64 product
 # bound is delta_us * E50_RATE_MILLI < 2^63, i.e. ~14,600 years of event
 # time at rate 20 — unreachable for any real log.)
 

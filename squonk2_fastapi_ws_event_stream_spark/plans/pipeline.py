@@ -1742,8 +1742,8 @@ ORACLES["x23_sample_size_planner"] = ORACLE_X23
 # the exact arm's per-key count aggregate (NDV-bounded shuffle) exists
 # only as the oracle-checkable verdict, like x20's exact percentiles.
 # ---------------------------------------------------------------------------
-# Sign-hash family hoisted to functions/hashing.py (one source shared
-# with the streaming ams_f2 twin, the KMV discipline).
+# Sign-hash family hoisted to functions/hashing.py (one source, the KMV
+# discipline).
 from ..functions.hashing import AMS_A, AMS_B, AMS_D, AMS_P  # noqa: E402
 
 
@@ -2062,10 +2062,9 @@ ORACLES["x29_fagin_ta_topk"] = ORACLE_X29
 # x30 — Misra–Gries mergeable heavy-hitter summaries: the deterministic
 # counter-based sketch next to the hash-based x06 CMS (always-over) and
 # x28 Count-Sketch (unbiased): MG NEVER overestimates and carries the
-# classic deterministic guarantee  exact − n/(k+1) ≤ est ≤ exact.  The
-# streaming twin (`streaming/stateful.heavy_hitters`, Space-Saving) is
-# the same counter idea; this is the BATCH mergeable form (Agarwal et
-# al., "Mergeable Summaries", PODS'12).
+# classic deterministic guarantee  exact − n/(k+1) ≤ est ≤ exact.  This
+# is the BATCH mergeable form (Agarwal et al., "Mergeable Summaries",
+# PODS'12).
 #
 # Distributed shape: each Arrow batch folds to an MG(k) summary INSIDE
 # mapInPandas — vectorized, not a row loop: for a batch the MG result

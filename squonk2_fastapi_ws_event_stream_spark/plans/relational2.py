@@ -1727,10 +1727,8 @@ def x26_histogram_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n_a").cast("long").alias("n_a"),
         F.max("n_b").cast("long").alias("n_b"),
         F.count(F.lit(1)).cast("long").alias("n_buckets_hit"),
-        # round-10 conversion: truncating decimal-DIV micros — the same
-        # ppm form the streaming drift twin publishes (stateful.py
-        # _drift_ppm); the old ROUND(decimal→double quotient, 6) was
-        # t09-class.
+        # round-10 conversion: truncating decimal-DIV micros; the old
+        # ROUND(decimal→double quotient, 6) was t09-class.
         (
             F.expr(
                 "MAX(gap_scaled) * 1000000"

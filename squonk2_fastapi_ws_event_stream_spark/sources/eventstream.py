@@ -154,10 +154,18 @@ class EventLogWriter:
 
             timestamp_ms = int(time.time() * 1000)
         with _stream_lock(self.root, self.stream):
-            offset = self.next_offset()
-            rec = {"offset": offset, "timestamp": timestamp_ms, "value": body}
-            with open(self.path, "a", encoding="utf-8") as f:
-                f.write(json.dumps(rec) + "\n")
+            fd = os.open(self.path, os.O_RDWR | os.O_APPEND | os.O_CREAT, 0o666)
+            try:
+                # A publisher that died mid-append left bytes after the last
+                # newline: drop them, or they would prefix this record.
+                size = os.fstat(fd).st_size
+                if size and os.pread(fd, 1, size - 1) != b"\n":
+                    os.ftruncate(fd, os.pread(fd, size, 0).rfind(b"\n") + 1)
+                offset = self.next_offset()
+                rec = {"offset": offset, "timestamp": timestamp_ms, "value": body}
+                os.write(fd, (json.dumps(rec) + "\n").encode("utf-8"))
+            finally:
+                os.close(fd)
         return offset
 
 
@@ -177,16 +185,22 @@ def _read_log(root: str, stream: str, start_exclusive: int, end_inclusive: int |
     import pyarrow.json as pajson
 
     path = os.path.join(stream_dir(root, stream), LOG_FILE)
+    if not os.path.exists(path):
+        return
+    with open(path, "rb") as f:
+        data = f.read()
+    # Bytes after the last newline are a record still being written.
     # Retention that expires every record leaves a 0-byte log, which
     # pyarrow refuses to parse ("Empty JSON file"): it holds no rows.
-    if not os.path.exists(path) or os.path.getsize(path) == 0:
+    end = data.rfind(b"\n") + 1
+    if end == 0:
         return
 
     # C++-side JSONL parse (~10× a Python json.loads loop), then a
     # vectorized offset-range filter — the whole read never touches
     # Python-object rows.
     tbl = pajson.read_json(
-        path,
+        pa.BufferReader(pa.py_buffer(data).slice(0, end)),
         parse_options=pajson.ParseOptions(
             explicit_schema=pa.schema(
                 [("offset", pa.int64()), ("timestamp", pa.int64()), ("value", pa.string())]
@@ -218,8 +232,9 @@ def _last_offset(root: str, stream: str) -> int:
 
     This runs DRIVER-SIDE on every micro-batch plan (latestOffset), so it
     must not scale with log length: read a tail window and parse only the
-    last complete line (appends are line-atomic), growing the window in
-    the rare case a single record exceeds it."""
+    last complete line, growing the window in the rare case a single
+    record exceeds it. Bytes after the last newline are a record still
+    being written (or torn by a dead publisher), not yet part of the log."""
     last = 0
     path = os.path.join(stream_dir(root, stream), LOG_FILE)
     if os.path.exists(path):
@@ -229,6 +244,7 @@ def _last_offset(root: str, stream: str) -> int:
             while True:
                 f.seek(max(0, size - window))
                 chunk = f.read()
+                chunk = chunk[: chunk.rfind(b"\n") + 1]
                 lines = [ln for ln in chunk.split(b"\n") if ln.strip()]
                 # the first line of a mid-file window may be a fragment;
                 # with >= 2 lines (or a full-file window) the last is whole
@@ -295,6 +311,8 @@ def _seek_start(root: str, stream: str, options) -> int:
     if os.path.exists(path):
         with open(path, encoding="utf-8") as f:
             for line in f:
+                if not line.endswith("\n"):
+                    break  # a record still being written
                 if not line.strip():
                     continue
                 rec = json.loads(line)
@@ -439,7 +457,7 @@ def enforce_retention(
     age+size-bounded retention (README.md:222-237). Returns the number of
     expired messages. Replay requests older than what remains silently
     start at the first retained event (Q6 semantics, already handled by
-    _seek_start). Archive first (streaming/archive.py) if history matters.
+    _seek_start).
     """
     path = os.path.join(stream_dir(root, stream), LOG_FILE)
     if not os.path.exists(path):
@@ -452,7 +470,8 @@ def enforce_retention(
     # would otherwise destroy a message appended mid-pass.
     with _stream_lock(root, stream):
         with open(path, encoding="utf-8") as f:
-            recs = [json.loads(line) for line in f if line.strip()]
+            # an unterminated last line is a dead publisher's torn record
+            recs = [json.loads(line) for line in f if line.strip() and line.endswith("\n")]
         keep = recs
         if max_age_ms is not None:
             keep = [r for r in keep if now_ms - r["timestamp"] <= max_age_ms]

@@ -6,9 +6,7 @@ engine (stdlib sqlite3), same schema, but parameterized statements instead
 of the reference's injection-prone f-strings (app/app.py:284,631,686;
 SURVEY §2.7 note).
 
-This is control-plane state (a few rows per deployment). For the data
-plane, `to_dataframe` exposes it as a Spark DataFrame so stream-to-registry
-lookups become broadcast hash joins (SURVEY §2.6).
+This is control-plane state (a few rows per deployment).
 """
 
 from __future__ import annotations
@@ -17,8 +15,6 @@ import os
 import sqlite3
 import threading
 import uuid as uuid_mod
-
-from pyspark.sql import DataFrame, SparkSession
 
 _ALPHABET = "23456789ABCDEFGHJKLMNPQRSTUVWXYZabcdefghijkmnopqrstuvwxyz"
 
@@ -80,9 +76,3 @@ class Registry:
         with self._lock, self._conn() as con:
             cur = con.execute("DELETE FROM es WHERE id = ?", (es_id,))
             return cur.rowcount > 0
-
-    def to_dataframe(self, spark: SparkSession) -> DataFrame:
-        """Registry as a Spark DataFrame (broadcast-join side)."""
-        return spark.createDataFrame(
-            self.list_all() or [], schema="id long, uuid string, routing_key string"
-        )

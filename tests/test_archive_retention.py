@@ -1,75 +1,14 @@
-"""Stream archival to parquet and log retention enforcement."""
+"""Log retention enforcement and the health endpoint."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from squonk2_fastapi_ws_event_stream_spark.sources.eventstream import (
     EventLogWriter,
     EventStreamDataSource,
     enforce_retention,
 )
-from squonk2_fastapi_ws_event_stream_spark.streaming.archive import (
-    archive_stream,
-    read_archive,
-)
 
 BASE_TS = 1_700_000_000_000  # 2023-11-14
-DAY = 86_400_000
-
-
-def test_archive_stream_to_parquet_and_read_back(spark, tmp_path):
-    root = str(tmp_path / "log")
-    for s in ("a", "b"):
-        w = EventLogWriter(root, s)
-        for i in range(5):
-            w.publish('{"n": %d}' % i, BASE_TS + i * DAY)  # spans 5 days
-    spark.dataSource.register(EventStreamDataSource)
-
-    for s in ("a", "b"):
-        env = (
-            spark.readStream.format("eventstream")
-            .option("path", root)
-            .option("stream", s)
-            .option("startingOrdinal", 0)
-            .load()
-        )
-        q = archive_stream(env, s, str(tmp_path / "archive"), str(tmp_path / f"ckpt_{s}"))
-        q.awaitTermination(120)
-
-    hist = read_archive(spark, str(tmp_path / "archive"))
-    assert hist.count() == 10
-    assert set(hist.columns) == {
-        "key",
-        "offset",
-        "timestamp",
-        "value",
-        "body",
-        "event_date",
-    }
-    # lossless: raw log bytes survive alongside the decoded view
-    row = hist.filter((F.col("key") == "a") & (F.col("offset") == 1)).collect()[0]
-    assert bytes(row["value"]) == b'{"n": 0}'
-    assert row["body"] == '{"n": 0}'
-
-    # partition pruning: filtering by event_date must prune partitions
-    one_day = hist.filter(
-        (F.col("event_date") == "2023-11-16") & (F.col("key") == "a")
-    )
-    assert one_day.count() == 1
-    assert one_day.collect()[0]["offset"] == 3
-
-    # re-running the archive query is exactly-once (no duplicates)
-    env = (
-        spark.readStream.format("eventstream")
-        .option("path", root)
-        .option("stream", "a")
-        .option("startingOrdinal", 0)
-        .load()
-    )
-    q = archive_stream(env, "a", str(tmp_path / "archive"), str(tmp_path / "ckpt_a"))
-    q.awaitTermination(120)
-    assert read_archive(spark, str(tmp_path / "archive")).count() == 10
 
 
 def test_retention_by_age_and_count(spark, tmp_path):
@@ -83,6 +22,7 @@ def test_retention_by_age_and_count(spark, tmp_path):
         root, "s", max_age_ms=5000, now_ms=BASE_TS + 9000
     )
     assert expired == 4  # ordinals 1-4 (ts +0..+3s) are older than 5s
+    spark.dataSource.register(EventStreamDataSource)
     df = spark.read.format("eventstream").option("path", root).option("stream", "s").load()
     assert sorted(r["offset"] for r in df.collect()) == [5, 6, 7, 8, 9, 10]
 

@@ -5,11 +5,14 @@ is tested in test_websocket.py."""
 
 from __future__ import annotations
 
+import json
 import os
+import threading
+import time
 
 import pytest
 
-from squonk2_fastapi_ws_event_stream_spark.sources.eventstream import EventLogWriter
+from squonk2_fastapi_ws_event_stream_spark.sources.eventstream import LOG_FILE, EventLogWriter
 from squonk2_fastapi_ws_event_stream_spark.sources.registry import Registry
 from squonk2_fastapi_ws_event_stream_spark.streaming.api import create_app
 from squonk2_fastapi_ws_event_stream_spark.streaming.manager import StreamManager
@@ -25,6 +28,21 @@ class _Sink:
 
     def close(self, code, reason=""):
         self.closed = code
+
+
+class _RecordingSink:
+    """A consumer's sink that records every text and close it is sent."""
+
+    def __init__(self):
+        self.events = []
+        self.closed = threading.Event()
+
+    def send(self, texts):
+        self.events.extend(texts)
+
+    def close(self, code, reason=""):
+        self.events.append(("close", code))
+        self.closed.set()
 
 
 @pytest.fixture()
@@ -201,3 +219,63 @@ def test_health_probe_runs_no_spark_job(stack, spark):
     assert r.status_code == 200
     assert r.get_json() == {"spark": True, "consumers": {}}
     assert jobs == []
+
+
+def test_consumer_counts_received_to_the_pill_and_sent_frames(stack):  # A1
+    """`received` counts every message up to and including the POISON pill
+    (app/app.py:424-426); `sent` counts the frames delivered
+    (app/app.py:499-501). Dropped bodies are received but not sent, and
+    nothing after the pill is either."""
+    _, _, manager, log_root = stack
+    w = EventLogWriter(log_root, "charges")
+    bodies = [
+        '{"a": 1}',
+        '{"b": 2}',
+        '{"broken": ',  # malformed JSON: dropped
+        "",  # empty: skipped
+        "accountserver.MerchantCharge|sqn: 5",
+        "POISON",
+        '{"after": 7}',
+    ]
+    for i, body in enumerate(bodies):
+        w.publish(body, BASE_TS + i)
+    sink = _RecordingSink()
+    handle = manager.start_consumer("charges", sink, seek={"startingOrdinal": 0})
+    assert sink.closed.wait(60)
+    assert sink.events == [
+        '{"a": 1, "ess_ordinal": 1, "ess_timestamp": %d}' % BASE_TS,
+        '{"b": 2, "ess_ordinal": 2, "ess_timestamp": %d}' % (BASE_TS + 1),
+        "accountserver.MerchantCharge|sqn: 5|ordinal: 5|timestamp: %d" % (BASE_TS + 4),
+        ("close", 1000),
+    ]
+    assert handle.stats == {"received": 6, "sent": 3}
+
+
+def test_live_consumer_survives_a_torn_log_tail(stack):
+    """A record caught half-written by the query's planning is not yet
+    part of the log: once its line is complete it is delivered byte-exact,
+    and the query never fails (the session would close 1011)."""
+    _, _, manager, log_root = stack
+    w = EventLogWriter(log_root, "charges")
+    w.publish('{"a": 1}', BASE_TS)
+    sink = _RecordingSink()
+    handle = manager.start_consumer("charges", sink, seek={"startingOrdinal": 0})
+    deadline = time.monotonic() + 60
+    while not sink.events and time.monotonic() < deadline:
+        time.sleep(0.1)
+
+    line = json.dumps({"offset": 2, "timestamp": BASE_TS + 1, "value": '{"b": 2}'}) + "\n"
+    with open(os.path.join(log_root, "charges", LOG_FILE), "a", encoding="utf-8") as f:
+        f.write(line[:20])
+        f.flush()
+        time.sleep(1.5)  # three 500 ms triggers plan against the torn tail
+        f.write(line[20:])
+    w.publish("POISON", BASE_TS + 2)
+
+    assert sink.closed.wait(60), handle.query.exception()
+    assert sink.events == [
+        '{"a": 1, "ess_ordinal": 1, "ess_timestamp": %d}' % BASE_TS,
+        '{"b": 2, "ess_ordinal": 2, "ess_timestamp": %d}' % (BASE_TS + 1),
+        ("close", 1000),
+    ]
+    assert handle.query.exception() is None

@@ -3,13 +3,20 @@ semantics, per-stream ordering (FIXTURES.md §A1/§A5)."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
 
 from squonk2_fastapi_ws_event_stream_spark.sources.eventstream import (
+    LOG_FILE,
     EventLogWriter,
     EventStreamDataSource,
+    _last_offset,
+    _read_log,
+    _seek_start,
     list_streams,
     stream_exists,
 )
@@ -200,3 +207,52 @@ def test_last_offset_tail_read_edge_cases(tmp_path):
         for i in range(n):
             w2.publish("m" * (1 + (i * 37) % 300), 1_700_000_000_000 + i)
         assert _last_offset(root, name) == n, n
+
+
+def _torn_log(root: str, stream: str, torn: str) -> None:
+    """Three complete records, then `torn`: the bytes a publisher had
+    written of a fourth record when it died (no newline)."""
+    w = EventLogWriter(root, stream)
+    for i in range(3):
+        w.publish('{"n": %d}' % i, timestamp_ms=BASE_TS + i * 1000)
+    with open(os.path.join(root, stream, LOG_FILE), "a", encoding="utf-8") as f:
+        f.write(torn)
+
+
+@pytest.mark.parametrize(
+    "torn",
+    ['{"offset": 4, "timestamp": 10', '{"offset": 4, "value": "' + "x" * 20_000],
+    ids=["short", "longer-than-the-tail-window"],
+)
+def test_torn_tail_is_not_yet_written(spark, tmp_path, torn):
+    """Readers treat the bytes after the last newline as a record still
+    being written: the complete lines read as if the tail were absent."""
+    root = str(tmp_path / "log")
+    _torn_log(root, "t", torn)
+
+    assert _last_offset(root, "t") == 3
+    offs = [o for b in _read_log(root, "t", 0, None) for o in b.column("offset").to_pylist()]
+    assert offs == [1, 2, 3]
+    assert _seek_start(root, "t", {"startingTimestampMs": BASE_TS + 1000}) == 2
+    assert _seek_start(root, "t", {"startingTimestampMs": BASE_TS + 10**9}) == 3
+    assert _seek_start(root, "t", {}) == 3
+
+    spark.dataSource.register(EventStreamDataSource)
+    df = spark.read.format("eventstream").option("path", root).option("stream", "t").load()
+    assert [(r["offset"], bytes(r["value"])) for r in df.orderBy("offset").collect()] == [
+        (i + 1, b'{"n": %d}' % i) for i in range(3)
+    ]
+
+
+def test_publish_after_a_torn_tail_assigns_the_next_ordinal(tmp_path):
+    """A publisher that died mid-append leaves a torn line; the next
+    publish drops it and appends the next ordinal as a whole line."""
+    root = str(tmp_path / "log")
+    _torn_log(root, "t", '{"offset": 4, "timestamp": 10')
+
+    assert EventLogWriter(root, "t").publish("next", timestamp_ms=BASE_TS + 9000) == 4
+    with open(os.path.join(root, "t", LOG_FILE), encoding="utf-8") as f:
+        recs = [json.loads(line) for line in f]
+    assert [r["offset"] for r in recs] == [1, 2, 3, 4]
+    assert recs[-1] == {"offset": 4, "timestamp": BASE_TS + 9000, "value": "next"}
+    assert _last_offset(root, "t") == 4

@@ -27,12 +27,10 @@ CONVERTED = [
     PKG / "operators" / "dedup.py",
     # Round-9 additions: ROUND-free after the 46-query conversion batch
     # (t45's pagerank loop in graph.py, m09 in multimodal.py) — and the
-    # streaming modules, which were born integer-exact and must stay so.
+    # relay pipeline, which was born integer-exact and must stay so.
     PKG / "operators" / "graph.py",
     PKG / "operators" / "multimodal.py",
     PKG / "functions" / "hashing.py",
-    PKG / "streaming" / "stateful.py",
-    PKG / "streaming" / "aggregates.py",
     PKG / "streaming" / "pipeline.py",
     # Round-10 additions: ROUND-free after the final 33-query conversion
     # batch (t09/t15/v30, t47/t48/t53/t58/t61, q52/q54, e- and x-family).

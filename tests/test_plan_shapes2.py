@@ -6,6 +6,14 @@ from __future__ import annotations
 import io
 from contextlib import redirect_stdout
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from squonk2_fastapi_ws_event_stream_spark.functions.plan_guard import (
+    BOUNDED,
+    WORKLOAD,
+    _filter_class,
+)
 from squonk2_fastapi_ws_event_stream_spark.registry import QUERIES
 
 SF = "/root/testdata/sf0.001"
@@ -1472,3 +1480,34 @@ def test_q40_size_switch_single_window_at_bench_scale(spark):
     # the crossing-bucket table before its sort window.
     bplan = explain(_q40_bucket_refine(spark, SF), mode="simple")
     assert "BroadcastHashJoin" in bplan or "BroadcastNestedLoop" not in bplan
+
+
+# -- plan-guard classifier properties (pure string logic) -------------------
+@given(
+    st.sampled_from(["doc_id", "vec_id", "o_orderkey", "event_id"]),
+    st.integers(2, 10_000),
+    st.integers(0, 99),
+    st.booleans(),
+)
+@settings(max_examples=100, deadline=None)
+def test_filter_class_recognizes_stride_and_bounds(col, mod, rem, casted):
+    lit = f"cast({rem} as bigint)" if casted else str(rem)
+    mod_lit = f"cast({mod} as bigint)" if casted else str(mod)
+    stride = f"(({col}#12L % {mod_lit}) = {lit})"
+    assert _filter_class(stride) == WORKLOAD
+    eq = f"({col}#3L = {lit})"
+    assert _filter_class(eq) == BOUNDED
+    upper = f"({col}#3L < {lit})"
+    assert _filter_class(upper) == BOUNDED
+
+
+@given(st.text(alphabet="abcdefg_%()=<> 0123456789#L", max_size=60))
+@settings(max_examples=200, deadline=None)
+def test_filter_class_never_blesses_unknown_columns(cond):
+    # A condition that names no unique-key column proves nothing.
+    from squonk2_fastapi_ws_event_stream_spark.functions.plan_guard import (
+        UNIQUE_KEY_COLS,
+    )
+
+    if not any(c in cond for c in UNIQUE_KEY_COLS):
+        assert _filter_class(cond) is None

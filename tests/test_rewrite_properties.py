@@ -100,3 +100,61 @@ def test_t33_unique_gram_identity_on_random_corpora(spark, tmp_path_factory, cor
         assert r["n_grams"] == len(gs)
         assert r["n_dup_grams"] == n_dup, (i, gs)
         assert r["dup_frac"] == (n_dup * 1_000_000 // len(gs)) / 1e6
+
+
+# ---------------------------------------------------------------------------
+# CDC chunking (t68) shift-invariance — THE property that distinguishes
+# content-defined chunking from fixed-size blocks: prepending words to a
+# document leaves every chunk after the first content-defined boundary
+# byte-identical, so shared suffixes still dedup. Exercised on the pure
+# chunking rule (the same hash/boundary arithmetic the Spark expressions
+# and the DuckDB oracle both implement), hypothesis-driven.
+# ---------------------------------------------------------------------------
+def _cdc_chunks(words: list[str], mod: int = 8) -> list[str]:
+    """Reference implementation of t68's chunking rule."""
+    chunks: list[list[str]] = []
+    for w in words:
+        h = (ord(w[0]) if w else 0) * 131 + len(w) * 7 + (ord(w[-1]) if w else 0)
+        if h % mod == 0 or not chunks:
+            chunks.append([w])
+        else:
+            chunks[-1].append(w)
+    return [" ".join(c) for c in chunks]
+
+
+_word = st.text(alphabet="abcdefghij", min_size=1, max_size=8)
+
+
+@given(
+    doc=st.lists(_word, min_size=8, max_size=60),
+    prefix=st.lists(_word, min_size=1, max_size=10),
+)
+@settings(max_examples=300, deadline=None)
+def test_cdc_chunks_are_shift_invariant_past_first_boundary(doc, prefix):
+    base = _cdc_chunks(doc)
+    shifted = _cdc_chunks(prefix + doc)
+    # Every base chunk that STARTS at a boundary word (i.e. all but
+    # possibly the first) must reappear verbatim in the shifted doc's
+    # chunk list — content decides the cut, not position.
+    reappear = set(shifted)
+    for c in base[1:]:
+        assert c in reappear, (c, base, shifted)
+
+
+@given(doc=st.lists(_word, min_size=1, max_size=60))
+@settings(max_examples=300, deadline=None)
+def test_cdc_chunks_partition_the_document(doc):
+    chunks = _cdc_chunks(doc)
+    assert " ".join(chunks) == " ".join(doc)
+
+
+def test_cdc_reference_rule_matches_spark_and_oracle_hash():
+    # Pin the reference rule to the operator's constants: same affine
+    # hash (ascii(first)*131 + len*7 + ascii(last)), same mod.
+    from squonk2_fastapi_ws_event_stream_spark.operators.corpus import T68_MOD
+
+    assert T68_MOD == 8
+    # boundary example: a word whose hash is divisible by 8 starts a chunk
+    w = "aa"  # 97*131 + 2*7 + 97 = 12818 -> 12818 % 8 = 2: not a boundary
+    h = ord(w[0]) * 131 + len(w) * 7 + ord(w[-1])
+    assert h == 12818 and h % T68_MOD != 0
