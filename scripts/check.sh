@@ -4,11 +4,16 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-if [[ "${1:-}" == "--quick" ]]; then
-    # The tier-1 command (ROADMAP.md): no -x, so a known batch-surface
-    # failure does not hide the relay tests behind it.
+# The tier-1 command (ROADMAP.md), in a subshell so its environment stays
+# out of the later steps: no -x, so a known batch-surface failure does not
+# hide the relay tests behind it.
+tier1() (
     export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local
     python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+)
+
+if [[ "${1:-}" == "--quick" ]]; then
+    tier1
     exit 0
 fi
 
@@ -19,11 +24,22 @@ echo "=== round-open: reconcile the driver's bench-record drop ==="
 # (No-op when the record has no unexcused movers.)
 python scripts/reconcile_driver_bench.py || true
 
-echo "=== unit + parity suite (sf0.001) ==="
-python -m pytest tests/ -q
+# Every gated step runs even when an earlier one failed; the script fails
+# at the end, naming each step that failed.
+failed=()
+gate() {
+    local name="$1"
+    shift
+    echo "=== $name ==="
+    "$@" || failed+=("$name")
+}
 
-echo "=== driver-gate parity (sf0.01) ==="
-ORACLE_PARITY_SF=/root/testdata/sf0.01 python -m pytest tests/test_oracle_parity.py -q
+gate "unit + parity suite (tier-1)" tier1
+gate "driver-gate parity (sf0.01)" \
+    env ORACLE_PARITY_SF=/root/testdata/sf0.01 python -m pytest tests/test_oracle_parity.py -q
+gate "bench (sf0.1, gated vs per-query best-ever committed)" python bench.py --check
 
-echo "=== bench (sf0.1, gated vs per-query best-ever committed) ==="
-python bench.py --check
+if ((${#failed[@]})); then
+    printf 'FAILED: %s\n' "${failed[@]}" >&2
+    exit 1
+fi

@@ -122,13 +122,6 @@ def _ranks_smallest(
     return out
 
 
-def _kth_smallest(
-    df: DataFrame, col: str, k: int, lo: float, hi: float, n_range: int, depth: int = 0
-) -> float:
-    """Exact k-th smallest (1-indexed) — single-rank convenience form."""
-    return _ranks_smallest(df, col, [k], lo, hi, n_range, depth)[k]
-
-
 def exact_percentiles(
     df: DataFrame, col: str, pcts: tuple[float, ...]
 ) -> tuple[int, dict[float, float]]:

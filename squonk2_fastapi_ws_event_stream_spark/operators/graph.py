@@ -13,11 +13,12 @@ Scale design (100 TB):
   combinable. No all-pairs step, no driver-side adjacency.
 - Rounds needed = graph diameter. Near-dup similarity graphs are dense
   little cliques (diameter 1-3), so propagation converges in a handful
-  of rounds. For adversarial long-chain graphs the published fix is the
-  alternating large-star/small-star algorithm (Kiveris et al.,
-  "Connected Components in MapReduce and Beyond", SoCC'14), which
-  converges in O(log² n) rounds with the same per-round join shape; the
-  propagation loop below is the same plan with a simpler round body.
+  of rounds. A long-chain graph needs more rounds than the cap allows,
+  and the loop raises rather than return unconverged labels; the
+  published fix for that case is the alternating large-star/small-star
+  algorithm (Kiveris et al., "Connected Components in MapReduce and
+  Beyond", SoCC'14), which converges in O(log² n) rounds with the same
+  per-round join shape.
 - `localCheckpoint(eager=True)` after every round truncates lineage so
   the plan does not grow with iteration count (the classic iterative-
   DataFrame pitfall: round k re-derives rounds 1..k-1).
@@ -109,125 +110,12 @@ def connected_components(edges: DataFrame) -> DataFrame:
         prev_sum = cur_sum
     if not converged:
         # Unconverged labels are silently WRONG (some nodes still carry a
-        # non-minimal label); propagation needs diameter/2 rounds, so a
-        # long-chain graph must use the star variant instead.
+        # non-minimal label); propagation needs diameter/2 rounds.
         raise RuntimeError(
             f"connected_components did not converge within {MAX_CC_ROUNDS} "
-            "rounds (graph diameter too large for min-label propagation); "
-            "use connected_components_star, which converges in O(log^2 n) "
-            "rounds on any graph."
+            "rounds (graph diameter too large for min-label propagation)."
         )
     return labels.select("node", F.col("label").alias("cluster_id"))
-
-
-def connected_components_star(edges: DataFrame) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14): the
-    adversarial-diameter algorithm — O(log² n) rounds on ANY graph where
-    min-label propagation needs diameter/2.
-
-    Round body (same join+aggregate shapes as the propagation loop):
-    - large-star: every node links its LARGER neighbors to the minimum of
-      its closed neighborhood — long chains fold toward small ids.
-    - small-star: every node links its smaller-or-equal neighbors (and
-      itself) to that minimum — stars flatten.
-    Both are one groupBy (per-node min) + one join (emit rewired edges),
-    shuffling on the node key; the edge set only ever shrinks toward the
-    final star forest, where each component is {root} ∪ children and the
-    root is the component minimum.
-
-    Same output contract as :func:`connected_components`: (node,
-    cluster_id = component-minimum id) for every node appearing in
-    ``edges``.
-    """
-    # Canonical undirected edge set as (lo, hi) pairs, self-loops dropped.
-    e = (
-        edges.select(
-            F.least(F.col("src"), F.col("dst")).alias("lo"),
-            F.greatest(F.col("src"), F.col("dst")).alias("hi"),
-        )
-        .filter(F.col("lo") != F.col("hi"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    all_nodes = (
-        e.select(F.col("lo").alias("node"))
-        .unionByName(e.select(F.col("hi").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def _edge_fingerprint(df: DataFrame) -> tuple:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                (F.col("lo") * F.lit(1_000_003) + F.col("hi")).cast("decimal(38,0)")
-            ).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    def _directed(df: DataFrame) -> DataFrame:
-        return df.select(F.col("lo").alias("u"), F.col("hi").alias("v")).unionByName(
-            df.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-        )
-
-    prev_fp = _edge_fingerprint(e)
-    converged = False
-    for _ in range(MAX_CC_ROUNDS):
-        # large-star: m(u) = min(N(u) ∪ {u}); emit (v, m(u)) for v > u.
-        d = _directed(e)
-        m = d.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        large = (
-            d.join(m, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(
-                F.least(F.col("v"), F.col("m")).alias("lo"),
-                F.greatest(F.col("v"), F.col("m")).alias("hi"),
-            )
-            .filter(F.col("lo") != F.col("hi"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # small-star: emit (v, m(u)) for v <= u (v ∈ N(u)), plus (u, m(u)).
-        d2 = _directed(large)
-        m2 = d2.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        rewired = (
-            d2.join(m2, "u")
-            .filter(F.col("v") <= F.col("u"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .unionByName(m2.select(F.col("u").alias("a"), F.col("m").alias("b")))
-        )
-        e = (
-            rewired.select(
-                F.least(F.col("a"), F.col("b")).alias("lo"),
-                F.greatest(F.col("a"), F.col("b")).alias("hi"),
-            )
-            .filter(F.col("lo") != F.col("hi"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        fp = _edge_fingerprint(e)
-        if fp == prev_fp:
-            converged = True
-            break
-        prev_fp = fp
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not stabilize within "
-            f"{MAX_CC_ROUNDS} rounds — O(log^2 n) bound exceeded, input "
-            "edge list is likely adversarial or malformed."
-        )
-    # Star forest: every non-root node appears as `hi` with its root as
-    # `lo`; roots label themselves.
-    child_labels = e.groupBy(F.col("hi").alias("node")).agg(
-        F.min("lo").alias("cluster_id")
-    )
-    return (
-        all_nodes.join(child_labels, "node", "left")
-        .select(
-            "node", F.coalesce("cluster_id", F.col("node")).alias("cluster_id")
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -40,11 +40,6 @@ from ..tables import fan_out, table
 
 ADLER_MOD = 65521
 
-DECODED_SCHEMA = (
-    "doc_id long, n_bytes long, first_byte int, checksum long, kind string"
-)
-
-
 def attach_payload(docs: DataFrame) -> DataFrame:
     """Model a multimodal ingest: text → opaque binary payload + metadata.
 
@@ -144,25 +139,6 @@ def parse_wav(payload: bytes) -> tuple[int, int]:
     return rate, n_samples * 1000 // rate
 
 
-def decode_features(with_payload: DataFrame) -> DataFrame:
-    """Arrow-batched decode/feature-extract over the binary column."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = pdf["payload"].map(_decode_stub)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": feats.map(lambda d: d["n_bytes"]),
-                    "first_byte": feats.map(lambda d: d["first_byte"]),
-                    "checksum": feats.map(lambda d: d["checksum"]),
-                    "kind": pdf["meta"].map(lambda m: m["mime"]),
-                }
-            )
-
-    return with_payload.mapInPandas(run, schema=DECODED_SCHEMA)
-
-
 # Deterministic media-ingest rule (the corpus has no real media, so m01
 # synthesizes valid files for a subset): doc_id % 10 == 3 -> BMP,
 # doc_id % 10 == 7 -> WAV, everything else stays a text payload. Header
@@ -178,7 +154,7 @@ def _wav_params(doc_id: int) -> tuple[int, int]:
 
 def _attach_media_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     """Per-batch payload synthesis (the pandas half of
-    attach_media_payload, shared with the fused m01 stage)."""
+    attach_media_payload, shared with the fused stages)."""
     payloads, mimes = [], []
     for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
         if doc_id % 10 == 3:
@@ -230,8 +206,11 @@ M01_SCHEMA = (
 
 
 def _decode_media_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Per-batch magic-byte decode (the pandas half of
-    decode_media_features, shared with the fused m01 stage)."""
+    """Per-batch magic-byte decode, m01's kernel. Dispatch is on MAGIC
+    BYTES (not the mime column): BMP and WAV get the honest struct
+    parsers; anything else falls back to the stub features.
+    Non-applicable fields carry -1, not NULL (keeps hash comparison and
+    column types exact across engines)."""
     out = {
         k: []
         for k in (
@@ -264,28 +243,13 @@ def _decode_media_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-def decode_media_features(with_payload: DataFrame) -> DataFrame:
-    """Dispatch on MAGIC BYTES (not the mime column): BMP and WAV get the
-    honest struct parsers; anything else falls back to the stub features.
-    Non-applicable fields carry -1, not NULL (keeps hash comparison and
-    column types exact across engines)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _decode_media_pdf(pdf)
-
-    return with_payload.mapInPandas(run, schema=M01_SCHEMA)
-
-
 def m01_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesis + decode FUSED into ONE mapInPandas (round-10: the
     chained two-stage form paid two Arrow serialize/deserialize
     crossings and two Python-worker dispatches per run — the driver's
     r9 bench recorded m01 at 7.78x its best-ever under exactly that
     worker pressure. One stage halves the crossings and never ships the
-    synthesized payload bytes back through Arrow at all). The staged
-    attach/decode wrappers remain for the operators that need the
-    payload column itself (m05/m07/m08/m09/m13/m17)."""
+    synthesized payload bytes back through Arrow at all)."""
     docs = fan_out(table(spark, sf_dir, "documents").select("doc_id", "text"), spark)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -329,38 +293,11 @@ FROM documents
 
 
 # ---------------------------------------------------------------------------
-# Image / audio stage stubs: real Spark plumbing (schemas, Arrow batching,
+# Frame-sampling stage stub: real Spark plumbing (schema, Arrow batching,
 # partition parallelism), deterministic fake compute where the codec would
-# run. Swap the marked line for PIL/ffmpeg on a cluster that has them.
+# run. Swap the marked line for ffmpeg on a cluster that has it.
 # ---------------------------------------------------------------------------
-RESIZE_SCHEMA = "doc_id long, width int, height int, thumb binary"
 FRAMES_SCHEMA = "doc_id long, frame_idx int, frame_checksum long"
-
-
-def resize_images(with_payload: DataFrame, size: tuple[int, int] = (32, 32)) -> DataFrame:
-    """Thumbnail stage. STUB decode: treats the payload as raw bytes and
-    derives a deterministic pseudo-thumbnail (repeating byte pattern) of
-    exactly width*height bytes — the Arrow batch shape and output schema
-    are what a PIL implementation would produce."""
-    w, h = size
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            thumbs = [
-                bytes((payload * ((w * h) // max(len(payload), 1) + 1))[: w * h])
-                # ^ STUB: replace with PIL.Image.open(io.BytesIO(payload)).resize(size)
-                for payload in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": w,
-                    "height": h,
-                    "thumb": thumbs,
-                }
-            )
-
-    return with_payload.mapInPandas(run, schema=RESIZE_SCHEMA)
 
 
 def sample_frames(with_payload: DataFrame, n_frames: int = 4) -> DataFrame:
@@ -389,12 +326,6 @@ def sample_frames(with_payload: DataFrame, n_frames: int = 4) -> DataFrame:
     return with_payload.mapInPandas(run, schema=FRAMES_SCHEMA)
 
 
-def metadata_only(docs_with_payload: DataFrame) -> DataFrame:
-    """Metadata projection — never touches the payload column, so the scan
-    prunes the binary bytes entirely (asserted in test_plan_shapes)."""
-    return docs_with_payload.select("doc_id", "meta.mime", "meta.n_bytes")
-
-
 # ---------------------------------------------------------------------------
 # m02/m03 — the resize and frame-sample stages as ledger queries. The raw
 # thumb bytes are summarized to (octet_length, checksum) so the result is
@@ -409,9 +340,10 @@ def m02_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resize + summarize FUSED into ONE mapInPandas (round-10, the m01
     fix): the thumb bytes are built and checksummed inside the same
     batch loop — one Arrow crossing, and the 1 KiB-per-row thumbnails
-    never travel back through Arrow between stages. The staged
-    resize_images wrapper remains for consumers that need the thumb
-    payload itself."""
+    never travel back through Arrow between stages. STUB decode: the
+    payload is treated as raw bytes and repeated into a deterministic
+    pseudo-thumbnail of exactly width*height bytes — the Arrow batch
+    shape a PIL implementation would produce."""
     docs = fan_out(table(spark, sf_dir, "documents").select("doc_id", "text"), spark)
     w, h = THUMB_W, THUMB_H
 
@@ -422,7 +354,7 @@ def m02_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 thumb = bytes(
                     (payload * ((w * h) // max(len(payload), 1) + 1))[: w * h]
                 )
-                # ^ STUB kernel shared with resize_images; see its note.
+                # ^ STUB: replace with PIL.Image.open(io.BytesIO(payload)).resize((w, h))
                 sizes.append(len(thumb))
                 sums.append(sum(thumb) % ADLER_MOD)
             yield pd.DataFrame(
@@ -613,12 +545,6 @@ def _downsample_run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for k, v in row.items():
                 out[k].append(v)
         yield pd.DataFrame(out)
-
-
-def downsample_media(with_payload: DataFrame) -> DataFrame:
-    """Staged wrapper over _downsample_run for callers that already hold
-    a payload column; m05 itself uses the fused single-stage form."""
-    return with_payload.mapInPandas(_downsample_run, schema=M05_SCHEMA)
 
 
 def m05_media_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:

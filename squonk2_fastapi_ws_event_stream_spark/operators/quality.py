@@ -1215,12 +1215,6 @@ TRIGRAM_EXPR = (
     " slice(words, 3, size(words) - 2), (ab, c) -> concat(ab, ' ', c))"
 )
 
-SQL_TRIGRAMS = (
-    "list_transform(generate_series(1, len(words) - 2),"
-    " i -> words[i] || ' ' || words[i + 1] || ' ' || words[i + 2])"
-)
-
-
 def t53_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.skew import head_tail_freq_join
     from .dedup import _stage_cached

@@ -1523,7 +1523,6 @@ from ..functions.hashing import (  # noqa: E402 — section-local import
     KMV_P as _X25B_P,
 )
 
-X25B_SALT = 8
 # (column tag, Spark integer-key expr, DuckDB integer-key expr)
 X25B_KEYS = (
     ("l_orderkey", "l_orderkey", "l_orderkey"),

@@ -4,10 +4,10 @@ The reference arbitrates "at most one live consumer per stream" through a
 memcached knock-out cell checked on every message (/root/reference/app/
 app.py:320-344,451-462). Spark's model makes that protocol unnecessary:
 the control plane owns exactly one StreamingQuery handle per stream
-(SURVEY §1.4) — starting a new consumer stops the previous query first,
-and DELETE stops it synchronously (better than the reference, where an
-idle consumer lingers until the next message or a POISON pill,
-app/app.py:677-717; SURVEY §3.4).
+(SURVEY §1.4) — a new consumer replaces the previous one, whose query it
+stops once its own has started, and DELETE stops it synchronously (better
+than the reference, where an idle consumer lingers until the next message
+or a POISON pill, app/app.py:677-717; SURVEY §3.4).
 
 Delivery: each query's `foreachBatch` writes its wire strings straight to
 the consumer's sink, its WebSocket session (websocket.py), as the
@@ -60,8 +60,6 @@ class StreamManager:
         """Start (or replace) the single consumer for a stream, delivering
         to ``sink``. ``seek`` maps seek option names to raw values; the
         source parses them (`eventstream.seek_position`)."""
-        self.stop_consumer(stream)
-
         handle = ConsumerHandle(
             stream=stream,
             sink=sink,
@@ -116,8 +114,14 @@ class StreamManager:
             .trigger(processingTime="500 milliseconds")
             .start()
         )
+        # The one replacement point: registering the new handle and taking
+        # the one it replaces happen under one lock, so when two starts for
+        # a stream interleave, the later one still stops the earlier.
         with self._lock:
+            replaced = self._consumers.get(stream)
             self._consumers[stream] = handle
+        if replaced is not None:
+            self.stop_consumer_handle(replaced)
         return handle
 
     def stop_consumer(self, stream: str, handle: ConsumerHandle | None = None) -> None:

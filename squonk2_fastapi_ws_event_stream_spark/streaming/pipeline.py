@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.events import POISON
+POISON = "POISON"  # control message, never forwarded (app/app.py:463-467)
 
 
 def annotate(envelope: DataFrame) -> DataFrame:

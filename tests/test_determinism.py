@@ -106,18 +106,14 @@ def test_e50_refill_division_is_exact_beyond_double_range(spark):
     """ADVICE r8: the e50 refill used floor(double) division, exact only
     while delta_us * rate < 2^53 — yet the docstring's own span bound
     (~1e15 us x rate 20 = 2e16) exceeds that.  The refill now divides
-    exactly (remainder subtracted long-side, decimal quotient of an
-    exact integer).  Pin it against Python's arbitrary-precision // on
-    products chosen to break the double path: p = k*1e9 - 20 in the
-    ulp-64 double range rounds UP to k*1e9 before dividing, so the old
-    form published k where the true floor-div is k-1."""
+    with the long ``div`` of its SQL transform.  Pin that form against
+    Python's arbitrary-precision // on products chosen to break the
+    double path: p = k*1e9 - 20 in the ulp-64 double range rounds UP to
+    k*1e9 before dividing, so the old form published k where the true
+    floor-div is k-1."""
     import pyspark.sql.functions as F
 
-    from squonk2_fastapi_ws_event_stream_spark.operators.events import (
-        _e50_exact_div_1e9,
-    )
-
-    # products of the form delta_us * 20 (what _e50_refilled feeds in),
+    # products of the form delta_us * 20 (what the refill divides),
     # including the double-breaking shape and int64-edge magnitudes
     ps = [
         400_000_000 * 10**9 - 20,   # double floors to 4e8, exact is 4e8-1
@@ -129,8 +125,7 @@ def test_e50_refill_division_is_exact_beyond_double_range(spark):
     df = spark.createDataFrame([(p,) for p in ps], "p long")
     got = [
         r["q"]
-        for r in df.select(_e50_exact_div_1e9(F.col("p")).alias("q"))
-        .collect()
+        for r in df.select(F.expr("p div 1000000000").alias("q")).collect()
     ]
     want = [p // 10**9 for p in ps]
     assert got == want

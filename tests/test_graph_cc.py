@@ -38,55 +38,20 @@ def test_cc_labels_only_nodes_with_edges(spark):
     assert set(got) == {7, 8}
 
 
-def _label_map(df):
-    return {r["node"]: r["cluster_id"] for r in df.collect()}
-
-
-def test_star_matches_propagation_on_random_graphs(spark):
-    import random
-
-    from squonk2_fastapi_ws_event_stream_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
-
-    rng = random.Random(42)
-    edges = [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
-    edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    assert _label_map(connected_components_star(df)) == _label_map(connected_components(df))
-
-
-def test_star_handles_long_chain_where_propagation_raises(spark):
+def test_cc_raises_on_a_chain_longer_than_its_round_cap(spark):
     import pytest as _pytest
 
     from squonk2_fastapi_ws_event_stream_spark.operators.graph import (
         MAX_CC_ROUNDS,
-        connected_components,
-        connected_components_star,
     )
 
     n = 300  # diameter 299 >> 2*MAX_CC_ROUNDS propagation hops
     chain = [(i, i + 1) for i in range(n - 1)]
     df = spark.createDataFrame(chain, "src long, dst long")
 
-    got = _label_map(connected_components_star(df))
-    assert got == {i: 0 for i in range(n)}
-
     with _pytest.raises(RuntimeError, match="did not converge"):
         connected_components(df)
     assert MAX_CC_ROUNDS * 2 < n - 1  # the chain genuinely exceeds the cap
-
-
-def test_star_multiple_components_and_isolated_pairs(spark):
-    from squonk2_fastapi_ws_event_stream_spark.operators.graph import (
-        connected_components_star,
-    )
-
-    edges = [(10, 11), (11, 12), (20, 21), (30, 31), (31, 32), (32, 33), (30, 33)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = _label_map(connected_components_star(df))
-    assert got == {10: 10, 11: 10, 12: 10, 20: 20, 21: 20, 30: 30, 31: 30, 32: 30, 33: 30}
 
 
 def test_pagerank_mass_conservation(spark):

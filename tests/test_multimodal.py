@@ -1,17 +1,12 @@
-"""Multimodal column plumbing: binary payloads, Arrow batch stages,
-metadata-only pruning."""
+"""Multimodal column plumbing: binary payloads, Arrow batch stages, and
+the per-batch kernels the m-family queries run."""
 
 from __future__ import annotations
 
-import io
-from contextlib import redirect_stdout
+import pandas as pd
 
 from squonk2_fastapi_ws_event_stream_spark.operators.multimodal import (
-    ADLER_MOD,
     attach_payload,
-    decode_features,
-    metadata_only,
-    resize_images,
     sample_frames,
 )
 from squonk2_fastapi_ws_event_stream_spark.tables import table
@@ -23,27 +18,6 @@ def _docs(spark):
     return attach_payload(table(spark, SF, "documents").select("doc_id", "text").limit(20))
 
 
-def test_decode_features_deterministic(spark):
-    rows = {r["doc_id"]: r for r in decode_features(_docs(spark)).collect()}
-    src = {r["doc_id"]: r["text"] for r in
-           table(spark, SF, "documents").select("doc_id", "text").limit(20).collect()}
-    for doc_id, text in src.items():
-        got = rows[doc_id]
-        payload = text.encode("utf-8")
-        assert got["n_bytes"] == len(payload)
-        assert got["first_byte"] == payload[0]
-        assert got["checksum"] == sum(payload) % ADLER_MOD
-        assert got["kind"] == "text/plain"
-
-
-def test_resize_stage_produces_fixed_size_thumbs(spark):
-    out = resize_images(_docs(spark), size=(16, 8)).collect()
-    assert len(out) == 20
-    for r in out:
-        assert (r["width"], r["height"]) == (16, 8)
-        assert len(r["thumb"]) == 16 * 8  # exact thumbnail byte size
-
-
 def test_frame_sampling_fans_out(spark):
     out = sample_frames(_docs(spark), n_frames=4).collect()
     assert len(out) == 80  # 20 docs × 4 frames
@@ -51,20 +25,6 @@ def test_frame_sampling_fans_out(spark):
     for r in out:
         per_doc.setdefault(r["doc_id"], []).append(r["frame_idx"])
     assert all(sorted(v) == [0, 1, 2, 3] for v in per_doc.values())
-
-
-def test_metadata_query_prunes_payload_bytes(spark):
-    df = metadata_only(_docs(spark))
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    # the binary payload column must not survive into the scan output
-    read_schema = [l for l in plan.splitlines() if "ReadSchema" in l]
-    if read_schema:  # parquet scan present
-        assert "payload" not in read_schema[0]
-    rows = df.collect()
-    assert rows and all(r["mime"] == "text/plain" for r in rows)
 
 
 # -- honest codec tier: BMP/WAV struct parsers ------------------------------
@@ -106,35 +66,48 @@ def test_parsers_reject_non_media():
         parse_wav(b"RIFFxxxxNOPE")
 
 
-def test_m01_extracts_true_header_values(spark):
+def test_m01_extracts_true_header_values():
     """The decode reads header BYTES: corrupt the width field of one BMP
     and the parser must report the corrupted value, proving it does not
     shortcut via the doc_id formula."""
     import struct
 
     from squonk2_fastapi_ws_event_stream_spark.operators.multimodal import (
-        decode_media_features,
+        _decode_media_pdf,
         make_bmp,
     )
 
     good = make_bmp(20, 10, 1)
     tampered = bytearray(make_bmp(20, 10, 1))
     struct.pack_into("<i", tampered, 18, 999)  # overwrite width in-place
-    df = spark.createDataFrame(
-        [(1, bytes(good), "image/bmp"), (2, bytes(tampered), "image/bmp")],
-        "doc_id long, payload binary, mime string",
+    pdf = pd.DataFrame(
+        {
+            "doc_id": [1, 2],
+            "payload": [bytes(good), bytes(tampered)],
+            "mime": ["image/bmp", "image/bmp"],
+        }
     )
-    rows = {r["doc_id"]: r for r in decode_media_features(df).collect()}
+    rows = _decode_media_pdf(pdf).set_index("doc_id").to_dict("index")
     assert (rows[1]["width"], rows[1]["height"]) == (20, 10)
     assert rows[2]["width"] == 999  # parsed from bytes, not predicted
 
 
-def test_m05_downsamplers_read_pixel_and_sample_bytes(spark):
+def _downsampled(doc_ids, payloads):
+    """m05's batch kernel over one batch, as {doc_id: row}."""
+    from squonk2_fastapi_ws_event_stream_spark.operators.multimodal import (
+        _downsample_run,
+    )
+
+    batch = pd.DataFrame({"doc_id": doc_ids, "payload": payloads})
+    (out,) = _downsample_run(iter([batch]))
+    return out.set_index("doc_id").to_dict("index")
+
+
+def test_m05_downsamplers_read_pixel_and_sample_bytes():
     """Tamper one pixel byte of a BMP and one sample byte of a WAV: the
     downsample checksums must CHANGE, proving the resize/decimation read
     the media bytes rather than shortcutting via the builder formula."""
     from squonk2_fastapi_ws_event_stream_spark.operators.multimodal import (
-        downsample_media,
         make_bmp,
         make_wav,
     )
@@ -144,23 +117,18 @@ def test_m05_downsamplers_read_pixel_and_sample_bytes(spark):
     t_bmp[54] = (t_bmp[54] + 1) % 256  # pixel (0,0) blue channel — sampled
     t_wav = bytearray(wav)
     t_wav[44] = (t_wav[44] + 1) % 256  # sample 0 low byte — kept by 2x decim
-    df = spark.createDataFrame(
-        [(1, bmp), (2, bytes(t_bmp)), (3, wav), (4, bytes(t_wav))],
-        "doc_id long, payload binary",
-    )
-    rows = {r["doc_id"]: r for r in downsample_media(df).collect()}
+    rows = _downsampled([1, 2, 3, 4], [bmp, bytes(t_bmp), wav, bytes(t_wav)])
     assert rows[1]["out_w"] == 10 and rows[1]["out_h"] == 5
     assert rows[3]["out_rate"] == 4000 and rows[3]["out_samples"] == 50
     assert rows[1]["ds_checksum"] != rows[2]["ds_checksum"]
     assert rows[3]["ds_checksum"] != rows[4]["ds_checksum"]
 
 
-def test_m05_skips_unsampled_bytes(spark):
+def test_m05_skips_unsampled_bytes():
     """Tampering a pixel the 2x nearest-neighbor selection SKIPS (odd row)
     must leave the checksum unchanged — the downsample is a real
     selection, not a whole-payload hash."""
     from squonk2_fastapi_ws_event_stream_spark.operators.multimodal import (
-        downsample_media,
         make_bmp,
     )
 
@@ -168,10 +136,7 @@ def test_m05_skips_unsampled_bytes(spark):
     row_bytes = ((3 * 20 + 3) // 4) * 4
     t = bytearray(bmp)
     t[54 + row_bytes] = (t[54 + row_bytes] + 1) % 256  # row 1 — never sampled
-    df = spark.createDataFrame(
-        [(1, bmp), (2, bytes(t))], "doc_id long, payload binary"
-    )
-    rows = {r["doc_id"]: r for r in downsample_media(df).collect()}
+    rows = _downsampled([1, 2], [bmp, bytes(t)])
     assert rows[1]["ds_checksum"] == rows[2]["ds_checksum"]
 
 

@@ -349,6 +349,58 @@ def test_concurrent_starts_each_replay_and_close_on_poison(ws_stack):
     assert results == {u: ([1, 2, 3], (CLOSE_NORMAL, "")) for u in uuids}
 
 
+def test_concurrent_connects_to_one_stream_leave_no_orphan_consumer(ws_stack):
+    """Two clients connect to one stream at once. The later registration
+    replaces the earlier consumer, so once the stream is stopped every
+    session has its close frame and no consumer or query is left."""
+    server, registry, manager, log_root = ws_stack
+    w = EventLogWriter(log_root, "s")
+    for i in range(3):  # no POISON: each consumer runs until it is stopped
+        w.publish('{"message_type": "t", "message_body": {"sqn": %d}}' % i, BASE_TS + i)
+    es_uuid = registry.create("s")["uuid"]
+
+    handles = []
+    start_consumer = manager.start_consumer
+
+    def counting_start(*args, **kwargs):
+        handle = start_consumer(*args, **kwargs)
+        handles.append(handle)
+        return handle
+
+    manager.start_consumer = counting_start
+    gate = threading.Barrier(2)
+    closes = {}
+
+    def consume(k):
+        gate.wait()
+        c = WsClient(
+            "127.0.0.1", server.port, f"/event-stream/{es_uuid}?stream_from_ordinal=0",
+            timeout=40,
+        )
+        close = None
+        try:
+            while close is None:
+                _, close = c.recv_text_or_close()
+        except OSError:
+            pass  # no close frame within the timeout
+        finally:
+            c.shutdown()
+            closes[k] = close
+
+    clients = [threading.Thread(target=consume, args=(k,), daemon=True) for k in range(2)]
+    for t in clients:
+        t.start()
+    assert _wait_for(lambda: len(handles) == 2, 120)
+    manager.stop_consumer("s")
+    for t in clients:
+        t.join(timeout=60)
+    # The close code is not asserted: a query that fails to start closes
+    # its session 1011 (ROADMAP item 5's start race), not 1000.
+    assert closes[0] is not None and closes[1] is not None, closes
+    assert manager.snapshot() == {}
+    assert not any(h.query.isActive for h in handles)
+
+
 def test_ws_close_fails_a_send_blocked_on_a_client_that_does_not_read(fake_stack):
     """No Spark: a session delivers its sink's sends, and its close fails a
     send blocked on a client that stopped reading, within the close's
@@ -652,3 +704,18 @@ def test_seek_position_field_messages_and_precedence():
     )
     assert seek_position({"startingOrdinal": "4"}) == ("ordinal", 4)
     assert seek_position({}) == ("latest", None)
+    assert seek_position({"startingTimestampMs": "1700000000000"}) == (
+        "timestamp",
+        1_700_000_000_000,
+    )
+    # A datetime without a zone is UTC, whatever the process zone is.
+    assert seek_position({"startingDatetime": "1970-01-01T00:00:01"}) == ("timestamp", 1000)
+    assert seek_position({"startingDatetime": "1970-01-01T01:00:01+01:00"}) == (
+        "timestamp",
+        1000,
+    )
+    # Spark hands a data source its options as a CaseInsensitiveDict whose
+    # keys are lowercased.
+    from pyspark.sql.datasource import CaseInsensitiveDict
+
+    assert seek_position(CaseInsensitiveDict({"startingordinal": "7"})) == ("ordinal", 7)
