@@ -136,414 +136,6 @@ _NEW_OR_CHANGED: tuple[str, ...] = (
     "e50_token_bucket_replay",
 )
 
-# Round-11 head, kept for the ledger's history (same role as _ROUND10_HEAD).
-_ROUND11_HEAD = (
-    # round 11: NEAR-ZERO head by design (VERDICT r10 tasks #1/#4). The
-    # ROUND-on-double worklist is EMPTY and no output changes are planned,
-    # so all ~50 driver sampler slots flow stalest-first into the 51-query
-    # cohort whose latest driver row is r2/r3 (q19-q23, t12, t16, x01,
-    # x03, x05-x08, e09, q06-q10, q13, q15-q18, ...). Only genuinely
-    # output- or plan-changed queries may enter here this round.
-    #
-    # round 11 PLAN-changed (VERDICT r10 task #3, the t60 structural A/B
-    # — output bit-identical at sf0.001/0.01/0.1): covered's .distinct()
-    # dropped (LEFT ANTI ignores right duplicates) and n_words computed
-    # from size(words) instead of re-exploding every word; solo sf0.1
-    # 2.06 -> 1.65 s (SCALING.md round-11 notes).
-    "t60_dup_span_removal",
-    # round 11 NEW: reciprocal-rank fusion (Cormack et al. SIGIR'09) —
-    # the hybrid-retrieval fusion step the v-family lacked (cosine +
-    # inner-product rankings fused via exact integer-micro 1/(60+r)
-    # weights; one corpus scan, one shuffle for all three windows).
-    "v38_reciprocal_rank_fusion",
-    # round 11 PLAN-changed (the 10x-corpus scale probe, SCALING.md
-    # "round-11 band-family scale probe"): t02/t31's shared band-join
-    # candidates gained t65-style hot-bucket suppression (buckets >64
-    # dropped in engine AND oracle) after a synthetic 10x-sf0.1 corpus
-    # measured a 2,231-doc bucket driving 9.36M candidate pairs — t02
-    # ran 53x its sf0.1 time, now 5.6x (and the residual tracks true
-    # dup mass). Max bucket at every driver SF is 5, so tested outputs
-    # are bit-identical; the rest of the band family (t38, t49, t52,
-    # t55, m10, v08) is the measured round-12 worklist.
-    "t02_dedup_minhash_lsh",
-    "t31_minhash_estimate_eval",
-    # round 11 OPTIMIZATION PLAN-changed (guide §2.5 skew / §3.1 joins;
-    # OPTIMIZATION_r11.md has the full per-query ledger). Outputs are
-    # bit-identical at every driver SF — parity re-verified hash-exact at
-    # sf0.001/0.01/0.1 for every query below; the oracle SQL carries the
-    # same guards so parity holds at ANY scale.
-    #
-    # (a) The t02 hot-bucket cap ported to the REST of the LSH band
-    # family (the measured super-linear cohort from SCALING.md's 10x
-    # probe: t55 17.2x, t49 7.55x, t52 6.06x, m10/m11 5.75x, v08 2.53x,
-    # t38 = t02's 53x shape): band tables are bucket-capped via the
-    # shared suppress_hot_buckets (aggregate + anti-join, never a count
-    # window) and staged per corpus. Caps sit above every driver-SF
-    # bucket (text 64; image/SRP 128), so they bite only the
-    # quadratic blowup above test scale.
-    "t38_shingle_containment",
-    "t49_lsh_band_sweep",
-    "t52_fuzzy_decontamination",
-    "t55_incremental_neardup",
-    "m10_image_neardup_bands",
-    "m11_caption_consistency",
-    "v08_neardup_srp_lsh",
-    # (b) Size-adaptive IVF centroid stride (v33 measured 20.5x at 10x
-    # data: fixed stride-50 makes K = N/50 cells, so assignment is
-    # O(N^2/50)). The effective stride grows ceil(sqrt(N/5000)) base
-    # strides, K ~ 1.41*sqrt(N) -> O(N^1.5) assignment; at every driver
-    # SF N <= 5000 so the stride is exactly 50 and outputs are
-    # bit-identical. Every CENTROID_STRIDE consumer changed in lockstep
-    # (engine + oracle).
-    "v03_ann_ivf_topk",
-    "v07_ann_kmeans_topk",
-    "v12_semdedup",
-    "v13_cluster_representatives",
-    "v14_ann_ivf_pq_topk",
-    "v16_nprobe_recall_curve",
-    "v22_ivf_cell_quality",
-    "v26_ivf_cell_balance",
-    "v27_ivf_incremental_add",
-    "v28_kmeans_iteration",
-    "v29_embedding_outliers",
-    "v31_ivf_delete_maintenance",
-    "v33_knn_graph",
-    "v34_range_search",
-    # (b continued) downstream consumers of the SAME shared IVF index /
-    # centroid rows — their analyzed plans carry the derived-stride
-    # subtree even though their own code is untouched (the fingerprint
-    # guard caught them, exactly its job):
-    "v10_ann_recall_at_k",
-    "v11_ann_pq_topk",
-    "v20_quantization_recall",
-    "v21_ann_mrr_eval",
-    "v30_retrieval_quality",
-    "v37_hubness_audit",
-    # (c) session-2 optimization: t65's own hot-bucket cap converted
-    # from the pioneer count-window form to the shared
-    # suppress_hot_buckets aggregate + LEFT ANTI + staged capped band
-    # table (the form batch (a) standardized family-wide). Kept rows
-    # identical at ANY scale; oracle untouched; parity re-verified
-    # hash-exact at sf0.001/0.01/0.1. Plan: 4 Window + 4 Sort -> 0.
-    "t65_containment_dedup",
-    # (d) session-3 optimization (guide §2.3/§2.4/§8; OPTIMIZATION_r11.md
-    # session-3 ledger). Oracles untouched; parity re-verified hash-exact
-    # at sf0.001/0.01/0.1 for each:
-    # - q21: the EXISTS/NOT-EXISTS double correlation computed from ONE
-    #   (l_orderkey, l_suppkey) aggregate + per-order rollup — the fact
-    #   is scanned once instead of three times (probe + semi + anti).
-    "q21_waiting_suppliers",
-    # - q26: Catalyst's LATERAL decorrelation produced 3 exchanges and a
-    #   GLOBAL range-sort of orders; the direct form is semi-join prune
-    #   + one WindowGroupLimit-ed per-custkey window (1 exchange).
-    "q26_lateral_topn",
-    # - x07/x18: the bloom-audit probe reduced to a per-key
-    #   (l_orderkey, cnt, is_match) table staged once per corpus and
-    #   SHARED by both queries; every counter is a cnt-weighted sum over
-    #   distinct keys (guide-§8 proxy rows) — the per-row audit join and
-    #   per-row bit probes are gone.
-    "x07_bloom_join_pruning",
-    "x18_bloom_fpr_sweep",
-    # - x25/x25b: the multi-count_distinct aggregate (Spark's Expand
-    #   plan — every fact row replicated ×9 through the partial
-    #   aggregate) replaced by one two-phase single-distinct subtree per
-    #   column, staged per corpus as the shared 8-row exact-NDV table
-    #   both queries consume (solo sf0.1 x25 3.83 → 0.72 s).
-    "x25_column_stats",
-    "x25b_column_stats_sketch",
-    # (e) session-3 batch 5 (guide §1.2 per-task work / §2.5 skew;
-    # OPTIMIZATION_r11.md batch-5 ledger). Oracles untouched; parity
-    # re-verified hash-exact at sf0.001/0.01/0.1 for each:
-    # - x15: ONE GK sketch per accuracy queried at every percentile
-    #   (the summary never depends on the query points, so every
-    #   published value is identical) — per-row sketch inserts drop
-    #   from |PCTS|×|ACCS| to |ACCS| (solo sf0.1 1.72 → 1.12 s).
-    #   x25b above additionally had its KMV arm converted from the
-    #   ×8-explode + salted-window bottom-K to per-column distinct +
-    #   local-top-K subtrees (same kept set by construction; solo
-    #   sf0.1 1.86 → 1.27 s).
-    "x15_quantile_accuracy_sweep",
-)
-
-# Round-10 head, kept for the ledger's history (same role as _ROUND9_HEAD).
-_ROUND10_HEAD = (
-    # round 10 CHANGED (VERDICT r9 tasks #1/#2/#8, AUDIT_ROUND_DOUBLES.md
-    # "Round-10 worklist" — the FINAL class-3/4 conversion batch; the
-    # worklist is now empty):
-    # - t09's avg_word_len/stopword_ratio publish as truncating-DIV
-    #   micros end to end (the composite score consumes the micro
-    #   integers directly); t15 inlines the same formula and v30
-    #   consumes the bucket, so all three changed together.
-    "t09_quality_score",
-    "t15_pipeline_quality_dedup_stats",
-    "v30_retrieval_quality",
-    # - e12/e19 sums publish as exact integer cents / 100.0; e34's seven
-    #   retention ratios and e37's two means are truncating-DIV micros;
-    #   e41's TWAP/naive mean are decimal-DIV micros of the cents
-    #   integral; e45's sqrt-bearing Pearson r is floor_scaled.
-    "e12_sliding_window",
-    "e19_gap_fill",
-    "e34_retention_triangle",
-    "e37_seasonal_anomalies",
-    "e41_time_weighted_avg",
-    "e45_metric_correlation",
-    # - q52's percent_rank/cume_dist are exact integer ratios (unique
-    #   window order key, the q25/t29 recipe); q54's avg_monetary,
-    #   t48/t53/t58/t61 fractions are micros; t47's profile cosine is
-    #   floor_scaled.
-    "q52_rank_battery",
-    "q54_rfm_segments",
-    "t47_source_similarity",
-    "t48_dedup_savings",
-    "t53_ngram_novelty",
-    "t58_vocab_coverage",
-    "t61_heaps_law",
-    # - x-family: x16 in the x13 e4-units/micros forms; x18/x24/x25/x27/
-    #   x31/x32/x23/x34/x35 ratios and means as decimal-DIV micros
-    #   (x31's rank key is the micro integer); x26 aligned with the
-    #   streaming drift twin's ppm form; x20/x15 publish the
-    #   bit-identical percentile raw/floor-scaled; sqrt/ln-bearing
-    #   columns (x14, x23 sd/cv, x32 z2, x34 rho2+diff_cuped, x35 t2,
-    #   x37 z2, x38 MDE) via floor_scaled.
-    "x14_linear_counting",
-    "x15_quantile_accuracy_sweep",
-    "x16_kmv_set_algebra",
-    "x18_bloom_fpr_sweep",
-    "x20_ddsketch_quantiles",
-    "x22_priority_sample",
-    "x23_sample_size_planner",
-    "x24_compaction_planner",
-    "x25_column_stats",
-    "x26_histogram_drift",
-    "x27_ams_f2",
-    "x31_poisson_bootstrap",
-    "x32_ab_proportion_test",
-    "x34_cuped_adjustment",
-    "x35_welch_ttest",
-    "x37_mann_whitney",
-    "x38_mde_planner",
-    # - m01/m02 PLAN-changed (outputs bit-identical): the chained
-    #   synthesis→decode / resize→summarize mapInPandas pairs are fused
-    #   into single Python stages (VERDICT r9 task #2).
-    "m01_multimodal_decode",
-    "m02_multimodal_resize",
-    # - m06 plan-changed via the shared attach_media_payload refactor
-    #   (caught by the fingerprint guard; output unchanged).
-    "m06_media_manifest",
-    # - m-family fuse completed (the m01/m02 pattern via the shared
-    #   fused_media_stage helper): m05/m08/m09/m13/m17 no longer chain
-    #   payload synthesis through a second mapInPandas, m15/m16 fuse
-    #   their build+detect/extract pairs (m10 changes via m08's staged
-    #   ahash table). Outputs bit-identical; plans single-Python-stage.
-    "m05_media_downsample",
-    "m08_perceptual_ahash",
-    "m09_audio_features",
-    "m10_image_neardup_bands",
-    "m11_caption_consistency",
-    "m13_silence_trim",
-    "m15_letterbox_detect",
-    "m16_exposure_stats",
-    "m17_audio_clipping",
-    # - e32/q29 caught by the NEW mechanical oracle-ROUND lint
-    #   (tests/test_oracle_round_lint.py) AFTER the hand audit closed:
-    #   both published decimal/decimal quotients rounded at the derived
-    #   scale inside the cast (the t59 boundary-digit class) — now
-    #   exact truncating-DIV e4/micro units.
-    "e32_cusum_changepoint",
-    "q29_market_share",
-)
-
-# Round-9 head, kept for the ledger's history (same role as _ROUND8_HEAD).
-_ROUND9_HEAD = (
-    # round 9 CHANGED (judge ADVICE r8): e50's refill division made
-    # exactly integer (remainder subtracted long-side + decimal quotient)
-    # instead of floor(double) — the old form's "far under 2^53" comment
-    # was wrong for >14-year event-time gaps; bit-identity vs the oracle
-    # and the streaming twin now holds at any gap the product's int64
-    # bound allows (~14,600 years).
-    "e50_token_bucket_replay",
-    # round 9 CHANGED (VERDICT r8 task #2, AUDIT_ROUND_DOUBLES.md class-3/4
-    # conversion, first ~30 of the 93-query worklist, stalest first):
-    # int/int ratio ROUNDs -> exact integer micros with truncating DIV;
-    # raw-parquet-double ROUNDs -> raw passthrough (same bytes both
-    # engines); interpolated quantiles -> floor of the bit-identical
-    # double; t44's order-dependent SUM(sqrt) OVER () -> sorted
-    # left-to-right fold + floor_scaled; t45's per-iteration float ROUND
-    # -> e12 fixed-point integer ranks (no float in the loop at all).
-    # t37/t39/t42 change via the shared t22 avg_bits publisher and t33
-    # dup_frac they stage.
-    "e07_message_stats",
-    "e14_log_compaction",
-    "e17_out_of_order_stats",
-    "e18_conversion_funnel",
-    "e20_dau_mau_stickiness",
-    "e21_hourly_anomalies",
-    "e22_event_type_markov",
-    "e23_interarrival_stats",
-    "q12_richest_per_nation",
-    "q14_value_percentiles",
-    "q24_conditional_functions",
-    "q25_window_frames",
-    "q26_lateral_topn",
-    "q27_unpivot_metrics",
-    "q30_large_volume_customers",
-    "q33_cohort_retention",
-    "q36_supplier_concentration",
-    "q38_returned_items",
-    "x04_skew_two_phase_agg",
-    "t17_repetition_stats",
-    "t22_unigram_logprob",
-    "t29_quality_calibration",
-    "t32_langid_confusion",
-    "t33_dup_ngram_spans",
-    "t34_dsir_importance",
-    "t37_quality_bucket_stats",
-    "t39_removal_priority",
-    "t42_canonical_selection",
-    "t43_length_histogram",
-    "t44_temperature_mixture",
-    "t45_pagerank",
-    "t46_canary_scan",
-    # x02's exact columns share the q14 percentile recipe — converted in
-    # the same commit (its oracle text also matched the q14 replacement).
-    "x02_approx_percentiles",
-    # round 9 CHANGED, second conversion batch (next-stalest cohort):
-    # e25/e22-style int-ratio micros (e25 lift/support, t30 surprisal,
-    # t36 zipf slope + top1, t27 tfidf via the x2 idf trick, q40 share,
-    # x13 e4-units estimate matching x25b's form), raw-double passthrough
-    # (q43, e26's exact .0/.5 medians, e27/q40 exact-int divisions),
-    # floor-of-quantile (e27), floor_scaled (m09 rms), decimal-DIV micros
-    # (e29 decayed score, q41 growth from recovered cents, x11 e10
-    # fixed-point averages and abs_err).
-    "e25_session_cooccurrence",
-    "e26_mad_anomalies",
-    "e27_funnel_latency",
-    "e29_decayed_trending",
-    "m09_audio_features",
-    "q40_weighted_median",
-    "q41_yoy_revenue_growth",
-    "q43_cdc_merge",
-    "t27_tfidf_top_terms",
-    "t30_bigram_lm",
-    "t36_zipf_stats",
-    "x11_sample_error_bounds",
-    "x13_kmv_distinct",
-    # q48 composes q43 (the fingerprint guard caught the coupling) and
-    # its own ROUND(b,2)-vs-merged comparison was the same t09 class —
-    # converted to raw-vs-raw in the same commit.
-    "q48_snapshot_diff",
-)
-
-# Round-8 head, kept for the ledger's history (same role as _ROUND7_HEAD).
-_ROUND8_HEAD = (
-    # round 8 NEW: the UDTF sentence segmenter re-registered as an
-    # explicitly-pedagogical demo (same plan/oracle as the removed
-    # t13_sentence_udtf; production simple-rule path is t13b) — a
-    # same-window A/B attributed its bench creep to Arrow batch overhead
-    # at toy scale (VERDICT r7 task #3).
-    "t13_udtf_demo",
-    # round 8 NEW: batch replay twin of the streaming rate_limiter
-    # (VERDICT r7 task #4) — bit-identical verdicts tested across paths.
-    "e50_token_bucket_replay",
-    # round 8 CHANGED (VERDICT r7 task #1, AUDIT_ROUND_DOUBLES.md class-2
-    # conversion): every float ROUND(x, n) in a checked column replaced by
-    # the engine-safe floor(x*1e6)/1e6 (cosines/norms/dots — identical
-    # expression both engines, floor of the same double is exact) or by
-    # exact integer micros with truncating DIV (recalls, accuracies,
-    # jaccards, containments, MRR, imbalance — int/int ratios). The
-    # shared cosine()/sql_cosine() helper edit changed every v-query plan;
-    # the dedup jaccard family changed with its own micros rewrite.
-    "t02_dedup_minhash_lsh",
-    "t04_ngram_jaccard_pairs",
-    "t31_minhash_estimate_eval",
-    "t38_shingle_containment",
-    "t52_fuzzy_decontamination",
-    "t55_incremental_neardup",
-    "v01_neardup_cosine",
-    "v02_ann_bruteforce_topk",
-    "v03_ann_ivf_topk",
-    "v04_label_centroids",
-    "v06_l2_normalize",
-    "v07_ann_kmeans_topk",
-    "v08_neardup_srp_lsh",
-    "v09_ann_sq8_topk",
-    "v10_ann_recall_at_k",
-    "v11_ann_pq_topk",
-    "v12_semdedup",
-    "v13_cluster_representatives",
-    "v14_ann_ivf_pq_topk",
-    "v15_matryoshka_recall",
-    "v16_nprobe_recall_curve",
-    "v17_knn_label_accuracy",
-    "v18_ann_hamming_topk",
-    "v19_ann_filtered_topk",
-    "v20_quantization_recall",
-    "v21_ann_mrr_eval",
-    "v22_ivf_cell_quality",
-    "v23_dim_stats",
-    "v24_embedding_drift",
-    "v25_label_affinity",
-    "v26_ivf_cell_balance",
-    "v27_ivf_incremental_add",
-    "v28_kmeans_iteration",
-    "v29_embedding_outliers",
-    "v30_retrieval_quality",
-    "v31_ivf_delete_maintenance",
-    "v32_mips_topk",
-    "v33_knn_graph",
-    "v34_range_search",
-    "v35_matryoshka_twostage",
-    "v36_dimension_health",
-    "v37_hubness_audit",
-    # round 8 CHANGED, fingerprint-INVISIBLE (Python UDF bodies — the
-    # analyzed plan cannot see them, so these are hand-listed): v05's
-    # pandas scorer now folds dimensions left-to-right and floor-publishes
-    # (bit-identical to the expression engines); m17 skips WAV payloads
-    # with no 'data' chunk instead of raising.
-    "v05_ann_pandas_udf_topk",
-    "m17_audio_clipping",
-    # round 8 CHANGED: x41 gained the AQE skew-split advisory columns
-    # (hot/median modeled partition rows + trips_aqe_skew_split) its
-    # docstring promised (VERDICT r7 task #8).
-    "x41_join_skew_audit",
-)
-
-# Round-7 head, kept for the ledger's history (same role as _ROUND6_HEAD).
-_ROUND7_HEAD = (
-    # round 7 CHANGED plans: t38's candidate stage reverted to the plain
-    # .distinct() band-collision form its oracle computes (the round-6
-    # t65 prefilter was wrongly applied to it — judge-confirmed oracle
-    # divergence at sf0.01); t60's duplicate-gram filter pushed into the
-    # frequency table before the join (same result, smaller build side).
-    "t38_shingle_containment",
-    "t60_dup_span_removal",
-    # q11: quarter dim derived from min/max + sequence() instead of a
-    # DISTINCT shuffle over every order (inner join makes the superset
-    # result-identical; the r5-vs-HEAD "creep" itself was host drift —
-    # see SCALING.md round-7 attribution).
-    "q11_quarter_range_join",
-    # round 7 NEW:
-    "x25b_column_stats_sketch",
-    "t67_code_detection",
-    "t68_cdc_chunk_dedup",
-    "e48_retention_bitmaps",
-    "x39_chi2_independence",
-    "v37_hubness_audit",
-    "m17_audio_clipping",
-    "q59_abc_classification",
-    "e49_duplicate_event_audit",
-    "q60_cohort_ltv",
-    "x41_join_skew_audit",
-    "t69_lang_perplexity_buckets",
-    # round 7 CHANGED (sf0.1 parity sweep): t09's composite moved to
-    # exact integer micros — one sf0.1 row hit a cross-engine ROUND(x,6)
-    # half-boundary on the double form; t15 inlines the formula and v30
-    # composes t09, so both plans changed with it.
-    "t09_quality_score",
-    "t15_pipeline_quality_dedup_stats",
-    "v30_retrieval_quality",
-)
-
 # Deliberately-deleted queries, acknowledged by name (round-8 guard):
 # scripts/plan_fingerprints.py refuses to drop a ledger entry unless the
 # query is listed here, and tests/test_plan_fingerprints.py requires the
@@ -555,100 +147,6 @@ _REMOVED: tuple[str, ...] = (
     # segmentation is t13b_sentence_split; the UDTF form is the
     # user-extensible demo surface — VERDICT r7 task #3).
     "t13_sentence_udtf",
-)
-
-# Round-6 head, kept for the ledger's history (no longer sampled first —
-# all have green r6 driver rows where sampled; the 28 never-sampled r6
-# registrations lead this round via _stalest_order, per VERDICT task #4).
-_ROUND6_HEAD = (
-    # round 6 NEW:
-    "t66_idf_simhash",
-    "e47_peak_rate",
-    "q58_revenue_concentration",
-    "x38_mde_planner",
-    "e46_seasonal_naive_mase",
-    "e45_metric_correlation",
-    "x37_mann_whitney",
-    "e44_interval_coverage",
-    "x36_srm_check",
-    "x35_welch_ttest",
-    "e43_pit_feature_join",
-    "t65_containment_dedup",
-    "q57_rolling_median_revenue",
-    "x34_cuped_adjustment",
-    "e42_watermark_lateness",
-    "v36_dimension_health",
-    "t64_pmi_collocations",
-    "e40_gapfill_locf",
-    "e41_time_weighted_avg",
-    "x32_ab_proportion_test",
-    "x33_benford_audit",
-    "q56_largest_remainder_alloc",
-    "m16_exposure_stats",
-    "x31_poisson_bootstrap",
-    "t63_pii_checksum_scan",
-    "e38_journey_anomaly",
-    "x30_misra_gries",
-    "e39_kaplan_meier",
-    "m15_letterbox_detect",
-    "q55_semi_additive_balance",
-    "t13b_sentence_split",
-    "t55_incremental_neardup",
-    "q44_rolling_revenue",
-    "q45_pivot_revenue",
-    "q46_exists_antijoin",
-    "v31_ivf_delete_maintenance",
-    "m10_image_neardup_bands",
-    "e31_touch_attribution",
-    "x19_stratified_sample",
-    "t56_bpe_pair_counts",
-    "x20_ddsketch_quantiles",
-    "v32_mips_topk",
-    "q47_above_customer_average",
-    "t57_sentence_dedup",
-    "q48_snapshot_diff",
-    "x21_zorder_layout",
-    "q49_skyline_parts",
-    "q50_recursive_referrals",
-    "e32_cusum_changepoint",
-    "e33_activity_streaks",
-    "x22_priority_sample",
-    "t58_vocab_coverage",
-    "v33_knn_graph",
-    "m11_caption_consistency",
-    "q51_incremental_agg_maintenance",
-    "q52_rank_battery",
-    "e34_retention_triangle",
-    "e35_peak_concurrency",
-    "x23_sample_size_planner",
-    "v34_range_search",
-    "x24_compaction_planner",
-    "x25_column_stats",
-    "e36_minmax_decimation",
-    "q53_nullsafe_diff",
-    "m12_video_scene_cuts",
-    "x26_histogram_drift",
-    "t59_rake_keywords",
-    "x27_ams_f2",
-    "m13_silence_trim",
-    "e37_seasonal_anomalies",
-    "t60_dup_span_removal",
-    "m14_shot_reuse",
-    "v35_matryoshka_twostage",
-    "x28_count_sketch",
-    "t61_heaps_law",
-    "t62_readability",
-    "q54_rfm_segments",
-    "x29_fagin_ta_topk",
-    # round 6 changed plans/semantics: broadcast hints removed (t54,
-    # q42), CDC tie-break (q43), decimal decay weights (e29), fixed-enum
-    # grouping rename (e25), histogram-selection bucket fix (x15).
-    "t54_incremental_dedup",
-    "q42_disjunctive_predicates",
-    "q43_cdc_merge",
-    "e29_decayed_trending",
-    "e25_session_cooccurrence",
-    "x15_quantile_accuracy_sweep",
 )
 
 

@@ -18,7 +18,8 @@ Semantics reproduced from the reference:
   EXCLUSIVE of the given position (README.md:196-202), ordinal 0 included
   (the reference's falsy-zero bug is fixed, SURVEY §2.2).
 - a replay position older than retention (i.e. before the first retained
-  event) silently starts at the first retained event (README.md:226-233).
+  event) silently starts at the first retained event (README.md:226-233);
+  an ordinal past the head attaches at the head, as a "latest" seek does.
 - missing stream → error at analysis time (WS close 1013 analog,
   app/app.py:311-318).
 
@@ -142,9 +143,6 @@ class EventLogWriter:
         os.makedirs(stream_dir(root, stream), exist_ok=True)
         self.path = os.path.join(stream_dir(root, stream), LOG_FILE)
 
-    def next_offset(self) -> int:
-        return _last_offset(self.root, self.stream) + 1
-
     def publish(self, body: str | bytes, timestamp_ms: int | None = None) -> int:
         """Append one message; returns its assigned offset (ordinal)."""
         if isinstance(body, bytes):
@@ -161,7 +159,7 @@ class EventLogWriter:
                 size = os.fstat(fd).st_size
                 if size and os.pread(fd, 1, size - 1) != b"\n":
                     os.ftruncate(fd, os.pread(fd, size, 0).rfind(b"\n") + 1)
-                offset = self.next_offset()
+                offset = _last_offset(self.root, self.stream) + 1
                 rec = {"offset": offset, "timestamp": timestamp_ms, "value": body}
                 os.write(fd, (json.dumps(rec) + "\n").encode("utf-8"))
             finally:
@@ -172,7 +170,7 @@ class EventLogWriter:
 ARROW_BATCH_ROWS = 10_000
 
 
-def _read_log(root: str, stream: str, start_exclusive: int, end_inclusive: int | None):
+def _read_log(root: str, stream: str, start_exclusive: int, end_inclusive: int):
     """Yield pyarrow RecordBatches of (key, value, offset, timestamp) for
     offsets in (start_exclusive, end_inclusive].
 
@@ -208,10 +206,9 @@ def _read_log(root: str, stream: str, start_exclusive: int, end_inclusive: int |
             unexpected_field_behavior="ignore",
         ),
     )
-    mask = pc.greater(tbl["offset"], start_exclusive)
-    if end_inclusive is not None:
-        mask = pc.and_(mask, pc.less_equal(tbl["offset"], end_inclusive))
-    tbl = tbl.filter(mask)
+    offsets = tbl["offset"]
+    keep = pc.and_(pc.greater(offsets, start_exclusive), pc.less_equal(offsets, end_inclusive))
+    tbl = tbl.filter(keep)
     if tbl.num_rows == 0:
         return
     out = pa.table(
@@ -304,7 +301,9 @@ def _seek_start(root: str, stream: str, options) -> int:
     if kind == "latest":
         return _last_offset(root, stream)
     if kind == "ordinal":
-        return value
+        # Past the head attaches at the head, so the start never lies
+        # beyond the engine's first latestOffset().
+        return min(value, _last_offset(root, stream))
     # Find the last offset at-or-before the cutoff (ms) → exclusive start.
     start = 0
     path = os.path.join(stream_dir(root, stream), LOG_FILE)
@@ -358,10 +357,14 @@ class EventStreamBatchReader(DataSourceReader):
         )
 
 
-
-
 class EventStreamStreamReader(DataSourceStreamReader):
-    """Micro-batch reader over one stream (single partition → total order)."""
+    """Micro-batch reader over one stream (single partition → total order).
+
+    Stateless: the engine's offset log holds each batch's range, and it
+    plans no next batch until foreachBatch returns, so the sink's blocking
+    socket write is the backpressure (SURVEY §2.9). Commits are the base
+    class's no-op: the log's retention is independent (README.md:222-233).
+    """
 
     def __init__(self, options):
         self.root = options["path"]
@@ -372,63 +375,20 @@ class EventStreamStreamReader(DataSourceStreamReader):
             # WS close 1013 analog (app/app.py:311-318)
             raise ValueError(f"EventStream backing stream does not exist: {self.stream}")
         self.options = options
-        # maxOffsetsPerTrigger-style backpressure (SURVEY §2.9).
-        # Note: availableNow snapshots ONE latestOffset() as the run's
-        # target, so a capped availableNow run drains at most one cap of
-        # messages per run; a recurring trigger drains the backlog one cap
-        # per trigger. See latestOffset() for the restart contract.
-        self.max_per_batch = int(options.get("maxOffsetsPerTrigger") or 0) or None
-        self._cursor: int | None = None  # last planned end offset
 
     def initialOffset(self) -> dict:
-        start = _seek_start(self.root, self.stream, self.options)
-        self._cursor = start
-        return {"offset": start}
+        return {"offset": _seek_start(self.root, self.stream, self.options)}
 
     def latestOffset(self) -> dict:
-        latest = _last_offset(self.root, self.stream)
-        if self.max_per_batch is not None:
-            # Cap from the planner's position. Fresh run: the seek start IS
-            # the position (the engine calls latestOffset before
-            # initialOffset, so the cursor is still unset). Restart: the
-            # engine replays the last committed range via partitions()
-            # BEFORE calling latestOffset, which syncs the cursor to the
-            # committed offset — the cap never lands below it. If a
-            # recovery path ever skips that replay, the seek-start base
-            # could undershoot the committed start; partitions() clamps end
-            # up to start, so the worst case is one empty batch (same
-            # offset re-committed), never a regressed commit or
-            # re-delivery.
-            base = (
-                self._cursor
-                if self._cursor is not None
-                else _seek_start(self.root, self.stream, self.options)
-            )
-            latest = min(latest, base + self.max_per_batch)
-        self._cursor = latest
-        return {"offset": latest}
+        return {"offset": _last_offset(self.root, self.stream)}
 
     def partitions(self, start: dict, end: dict):
-        # Never plan a regressed batch: the checkpoint's `start` is the
-        # committed truth, so clamp end up to it (a stale cap could
-        # otherwise hand us end < start).
-        lo, hi = start["offset"], max(start["offset"], end["offset"])
-        # Keep the rate-limit cursor in sync with the planner's actual
-        # progress (covers checkpoint-restart replay, where `start` comes
-        # from the offset log rather than our latestOffset()).
-        if self._cursor is None or hi > self._cursor:
-            self._cursor = hi
-        return [StreamSlice(self.stream, lo, hi)]
+        return [StreamSlice(self.stream, start["offset"], end["offset"])]
 
     def read(self, partition: StreamSlice):
         yield from _read_log(
             self.root, partition.stream, partition.start_exclusive, partition.end_inclusive
         )
-
-    def commit(self, end: dict) -> None:
-        # Offsets live in the checkpoint; the log is retained independently
-        # (age/size-bounded like the broker's retention, README.md:222-233).
-        pass
 
 
 class EventStreamDataSource(DataSource):

@@ -13,7 +13,9 @@ from pyspark.sql import functions as F
 from squonk2_fastapi_ws_event_stream_spark.sources.eventstream import (
     LOG_FILE,
     EventLogWriter,
+    EventStreamBatchReader,
     EventStreamDataSource,
+    EventStreamStreamReader,
     _last_offset,
     _read_log,
     _seek_start,
@@ -231,7 +233,7 @@ def test_torn_tail_is_not_yet_written(spark, tmp_path, torn):
     _torn_log(root, "t", torn)
 
     assert _last_offset(root, "t") == 3
-    offs = [o for b in _read_log(root, "t", 0, None) for o in b.column("offset").to_pylist()]
+    offs = [o for b in _read_log(root, "t", 0, 4) for o in b.column("offset").to_pylist()]
     assert offs == [1, 2, 3]
     assert _seek_start(root, "t", {"startingTimestampMs": BASE_TS + 1000}) == 2
     assert _seek_start(root, "t", {"startingTimestampMs": BASE_TS + 10**9}) == 3
@@ -256,3 +258,21 @@ def test_publish_after_a_torn_tail_assigns_the_next_ordinal(tmp_path):
     assert [r["offset"] for r in recs] == [1, 2, 3, 4]
     assert recs[-1] == {"offset": 4, "timestamp": BASE_TS + 9000, "value": "next"}
     assert _last_offset(root, "t") == 4
+
+
+def test_a_seek_past_the_head_attaches_at_the_head(tmp_path):
+    """The stream reader keeps no cursor, so its offsets must never go
+    backwards: a seek past the head starts at the head, the first
+    latestOffset(), and a batch read with the same seek holds no rows."""
+    root = str(tmp_path / "log")
+    w = EventLogWriter(root, "s")
+    for i in range(10):
+        w.publish('{"n": %d}' % i, timestamp_ms=BASE_TS + i * 1000)
+    options = {"path": root, "stream": "s", "startingOrdinal": "1000"}
+
+    reader = EventStreamStreamReader(options)
+    start, end = reader.initialOffset()["offset"], reader.latestOffset()["offset"]
+    assert start <= end == 10
+
+    batch = EventStreamBatchReader(options)
+    assert sum(b.num_rows for p in batch.partitions() for b in batch.read(p)) == 0

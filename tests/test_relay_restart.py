@@ -60,57 +60,3 @@ def test_relay_restart_does_not_redeliver(spark, tmp_path):
     third: list = []
     run(third)
     assert sorted(third) == [6, 7]
-
-
-def test_restart_with_rate_limit_neither_regresses_nor_redelivers(spark, tmp_path):
-    """maxOffsetsPerTrigger + checkpoint restarts: the cap after a restart
-    must be computed from the COMMITTED offset (synced via the engine's
-    replay of the last batch range), not from the seek position
-    (startingOrdinal=0) — a seek-based cap would plan a regressed batch
-    (end < committed start) and re-deliver already-delivered offsets.
-
-    availableNow snapshots one latestOffset() as the run's target, so each
-    capped run drains exactly one cap window; successive restarted runs
-    must walk the backlog in disjoint, in-order windows with no gaps, no
-    duplicates, and no regression.
-    """
-    root = str(tmp_path / "log")
-    w = EventLogWriter(root, "s")
-    for i in range(7):
-        w.publish('{"n": %d}' % i, BASE_TS + i * 1000)
-    spark.dataSource.register(EventStreamDataSource)
-
-    def run():
-        collected: list = []
-        env = (
-            spark.readStream.format("eventstream")
-            .option("path", root)
-            .option("stream", "s")
-            .option("startingOrdinal", 0)
-            .option("maxOffsetsPerTrigger", 3)
-            .load()
-        )
-        q = (
-            relay_transform(env)
-            .writeStream.foreachBatch(
-                lambda df, _id: collected.extend(r["offset"] for r in df.collect())
-            )
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return sorted(collected)
-
-    # fresh run is capped; restarted runs resume from the committed offset
-    assert run() == [1, 2, 3]
-    assert run() == [4, 5, 6]
-    assert run() == [7]
-    # fully drained: nothing re-delivered, offset not regressed
-    assert run() == []
-
-    # new data published between restarts flows exactly once, still capped
-    for i in range(7, 11):
-        w.publish('{"n": %d}' % i, BASE_TS + i * 1000)
-    assert run() == [8, 9, 10]
-    assert run() == [11]

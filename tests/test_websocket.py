@@ -312,6 +312,44 @@ def test_stop_ends_a_session_whose_client_stopped_reading(ws_stack):
         c.shutdown()
 
 
+def test_a_blocked_socket_write_holds_back_the_next_batch(ws_stack):
+    """Backpressure is the consumer's blocking socket write: while a client
+    does not read, the batch in delivery stays unsent and Spark plans no
+    next batch, as foreachBatch has not returned. Once the client reads,
+    every message arrives in order, with no gap."""
+    server, registry, manager, log_root = ws_stack
+    w = EventLogWriter(log_root, "charges")
+    pad = "x" * 65_000
+    body = '{"message_type": "t", "message_body": {"pad": "%s"}}' % pad
+    for i in range(400):
+        w.publish(body, BASE_TS + i)
+    rec = registry.create("charges")
+
+    def counts():
+        snap = manager.snapshot().get("charges", {})
+        return {k: snap.get(k) for k in ("received", "sent")}
+
+    c = WsClient(
+        "127.0.0.1", server.port, f"/event-stream/{rec['uuid']}?stream_from_ordinal=0",
+        timeout=120,
+    )
+    try:
+        assert _wait_for(lambda: counts()["received"], 120)
+        for i in range(400, 450):
+            w.publish(body, BASE_TS + i)
+        deadline = time.monotonic() + 3
+        while time.monotonic() < deadline:
+            assert counts() == {"received": 400, "sent": 0}
+            time.sleep(0.1)
+        ordinals = []
+        while len(ordinals) < 450:
+            text, close = c.recv_text_or_close()
+            assert close is None, close
+            ordinals.append(json.loads(text)["ess_ordinal"])
+        assert ordinals == list(range(1, 451))
+    finally:
+        c.shutdown()
+
 def test_concurrent_starts_each_replay_and_close_on_poison(ws_stack):
     """Four clients connect at once to four streams: each gets its replay
     and then close 1000 on the POISON pill."""
